@@ -341,83 +341,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.operators.Similarity.annGraphOf(s.table(tbl))
           .queryExecution.logical
       }))
-    // THE STANDING-STORE ADMISSION PATH from SQL text — the
-    // best-scaling variants of the dedup/admission verbs (probe cost
-    // scales with the BATCH, never the corpus) were Scala-only until
-    // now. Each TVF takes the store's CORPUS DIRECTORY (stores are
-    // keyed by dir, not view — they are cross-session standing state)
-    // and expands to the exact library probe plan: batch side
-    // fingerprinted/shingled fresh and shuffled once to the store's
-    // bucket granularity, store side streaming off its bucketed files
-    // merge-hinted (never a broadcast — the hint is already structural
-    // in the library plan, so no parsePlanHinted needed). EAGER store
-    // ensure: a missing store is built at ANALYSIS time (the
-    // dup_clusters/curate job-at-analysis caveat).
-    ext.injectTableFunction((
-      FunctionIdentifier("incremental_admit"),
-      info("incremental_admit"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "incremental_admit(corpusDir) — the standing fingerprint " +
-            "store's corpus directory (string literal)")
-        val d = strArg(args(0), "incremental_admit corpus dir")
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Dedup.qIncrementalDedupStore(s, d)
-          .queryExecution.logical
-      }))
-    ext.injectTableFunction((
-      FunctionIdentifier("neardup_admit"),
-      info("neardup_admit"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "neardup_admit(corpusDir) — the standing LSH band store's " +
-            "corpus directory (string literal)")
-        val d = strArg(args(0), "neardup_admit corpus dir")
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Dedup.qNeardupAdmitStore(s, d)
-          .queryExecution.logical
-      }))
-    ext.injectTableFunction((
-      FunctionIdentifier("span_admit"),
-      info("span_admit"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "span_admit(corpusDir) — the standing anchor store's " +
-            "corpus directory (string literal)")
-        val d = strArg(args(0), "span_admit corpus dir")
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.TextAnalysis.qSpanAdmitStore(s, d)
-          .queryExecution.logical
-      }))
-    // the standing VECTOR stores' probes from SQL text (the dedup
-    // grains' admission TVFs are above; these are their ANN twins):
-    // serve graph/IVF ANN from the persisted index for a corpus dir —
-    // ensure-on-missing like the admission trio, EAGER for the
-    // ann_graph reason (the walk is a driver loop).
-    ext.injectTableFunction((
-      FunctionIdentifier("ann_graph_store"),
-      info("ann_graph_store"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "ann_graph_store(corpusDir) — the standing graph store's " +
-            "corpus directory (string literal)")
-        val d = strArg(args(0), "ann_graph_store corpus dir")
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Similarity.qAnnGraphStore(s, d)
-          .queryExecution.logical
-      }))
-    ext.injectTableFunction((
-      FunctionIdentifier("ann_ivf_store"),
-      info("ann_ivf_store"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "ann_ivf_store(corpusDir) — the standing IVF store's " +
-            "corpus directory (string literal)")
-        val d = strArg(args(0), "ann_ivf_store corpus dir")
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Similarity.qAnnIvfStore(s, d)
-          .queryExecution.logical
-      }))
+    // THE STANDING-STORE PROBES from SQL text: one TVF per
+    // [[graft.sources.Stores]] family (its `probeTvf`). Each takes the
+    // store's CORPUS DIRECTORY (stores are keyed by dir, not view —
+    // they are cross-session standing state) and expands to the exact
+    // library probe plan: batch side fingerprinted/shingled fresh and
+    // shuffled once to the store's bucket granularity, store side
+    // streaming off its bucketed files merge-hinted (never a broadcast
+    // — the hint is already structural in the library plan, so no
+    // parsePlanHinted needed). EAGER store ensure: a missing store is
+    // built at ANALYSIS time (the dup_clusters/curate job-at-analysis
+    // caveat; the graph walk is a driver loop).
+    graft.sources.Stores.all.foreach { st =>
+      ext.injectTableFunction((
+        FunctionIdentifier(st.probeTvf),
+        info(st.probeTvf),
+        (args: Seq[Expression]) => {
+          require(args.length == 1,
+            s"${st.probeTvf}(corpusDir) — the standing ${st.family} " +
+              "store's corpus directory (string literal)")
+          val d = strArg(args(0), s"${st.probeTvf} corpus dir")
+          st.probe(org.apache.spark.sql.SparkSession.active, d)
+            .queryExecution.logical
+        }))
+    }
     // STORE MAINTENANCE from SQL text — the ingest lifecycle's other
     // two verbs (the admission TVFs above cover the probe): a SQL-only
     // deployment can now run the full loop — probe → admit → APPEND →
@@ -427,10 +374,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (a RunnableCommand executed after analysis) because an append to
     // an EXISTING catalog table inside a builder deadlocks on the
     // SessionCatalog monitor — see the command's scaladoc for the
-    // observed two-thread cycle. `family` picks the standing store:
-    // 'fp' | 'band' | 'anchor' (document grain — the batch view needs
-    // the probe columns), 'graph' | 'ivf' (embedding grain —
-    // (vec_id, embedding)). append_store ensures the store first
+    // observed two-thread cycle. `family` picks the standing store
+    // (its grain decides the batch view's columns: full document rows,
+    // or (vec_id, embedding)). append_store ensures the store first
     // (idempotent), so a cold deployment can bootstrap entirely from
     // SQL; appends anti-join standing rows (library semantics), so
     // re-running a statement is a no-op, not an erosion. Each returns
@@ -441,34 +387,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("append_store"),
       (args: Seq[Expression]) => {
         require(args.length == 3,
-          "append_store(family, corpusDir, batchTable) — family in " +
-            "fp|band|anchor|graph|ivf; batchTable names a view with the " +
+          s"append_store(family, corpusDir, batchTable) — family in " +
+            s"$storeFamilies; batchTable names a view with the " +
             "family's grain columns")
-        val fam = strArg(args(0), "append_store family")
+        val st = graft.sources.Stores(strArg(args(0), "append_store family"))
         val d = strArg(args(1), "append_store corpus dir")
         val v = ident(strArg(args(2), "append_store batch table"))
-        graft.plans.StoreMaintenanceCommand("append", fam, s => {
+        graft.plans.StoreMaintenanceCommand("append", st.family, s => {
           val batch = s.table(v)
-          val tbl = fam match {
-            case "fp" =>
-              val t = graft.operators.Dedup.ensureFpStore(s, d)
-              graft.operators.Dedup.appendFpStore(s, d, batch); t
-            case "band" =>
-              val t = graft.operators.Dedup.ensureBandStore(s, d)
-              graft.operators.Dedup.appendBandStore(s, d, batch); t
-            case "anchor" =>
-              val t = graft.operators.TextAnalysis.ensureAnchorStore(s, d)
-              graft.operators.TextAnalysis.appendAnchorStore(s, d, batch); t
-            case "graph" =>
-              val t = graft.operators.Similarity.ensureGraphStore(s, d)
-              graft.operators.Similarity.appendGraphStore(s, t, batch); t
-            case "ivf" =>
-              val t = graft.operators.Similarity.ensureIvfStore(s, d)
-              graft.operators.Similarity.appendIvfStore(s, d, batch); t
-            case other => throw new IllegalArgumentException(
-              s"append_store family must be fp|band|anchor|graph|ivf, got $other")
-          }
-          storeStatus(s, fam, tbl)
+          val tbl = st.ensure(s, d)
+          st.append(s, d, batch)
+          storeStatus(s, st.family, tbl)
         })
       }))
     ext.injectTableFunction((
@@ -476,34 +405,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("compact_store"),
       (args: Seq[Expression]) => {
         require(args.length == 2,
-          "compact_store(family, corpusDir) — family in " +
-            "fp|band|anchor|graph|ivf")
-        val fam = strArg(args(0), "compact_store family")
+          s"compact_store(family, corpusDir) — family in $storeFamilies")
+        val st = graft.sources.Stores(strArg(args(0), "compact_store family"))
         val d = strArg(args(1), "compact_store corpus dir")
-        graft.plans.StoreMaintenanceCommand("compact", fam, s => {
-          val tbl = fam match {
-            case "fp" =>
-              val t = graft.operators.Dedup.fpStoreTable(d)
-              graft.sources.Sources.compactBucketed(s, t, "fp"); t
-            case "band" =>
-              val t = graft.operators.Dedup.bandStoreTable(d)
-              graft.sources.Sources.compactBucketed(s, t, "bb"); t
-            case "anchor" =>
-              val t = graft.operators.TextAnalysis.anchorStoreTable(d)
-              graft.sources.Sources.compactBucketed(s, t, "h"); t
-            case "graph" =>
-              val t = graft.operators.Similarity.graphStoreTable(d)
-              graft.operators.Similarity.compactGraphStore(s, t); t
-            case "ivf" =>
-              val t = graft.operators.Similarity.ivfStoreTable(d)
-              graft.operators.Similarity.compactIvfStore(s, d); t
-            case other => throw new IllegalArgumentException(
-              s"compact_store family must be fp|band|anchor|graph|ivf, got $other")
-          }
-          storeStatus(s, fam, tbl)
+        graft.plans.StoreMaintenanceCommand("compact", st.family, s => {
+          st.compact(s, d)
+          storeStatus(s, st.family, st.tables(d).head)
         })
       }))
   }
+
+  private def storeFamilies: String =
+    graft.sources.Stores.all.map(_.family).mkString("|")
 
   /** The maintenance verbs' one-row status: the store's post-op row
     * count. */

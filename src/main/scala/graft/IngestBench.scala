@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * four hand-assembled rows: per batch cycle, probe the incoming
   * batch at all three dedup grains (exact fingerprint, LSH near-dup,
   * span coverage), append the batch to all five standing stores
-  * (fp / band / anchor / graph / ivf — the appends do their own
-  * novelty anti-joins, so re-ingested duplicates cost a probe, never
-  * an erosion), serve one ANN query from the growing graph store
-  * (the "is serving still flat while we ingest?" readout), and
+  * ([[graft.sources.Stores]]: fp / band / anchor / graph / ivf — the
+  * appends do their own novelty anti-joins, so re-ingested duplicates
+  * cost a probe, never an erosion), serve the fixed ANN query slice
+  * from the growing graph and IVF stores (the "is serving still flat
+  * while we ingest?" readout), and
   * compact every store after the middle cycle (the real lifecycle's
   * periodic maintenance, so the artifact shows both the multi-file
   * and compacted regimes).
@@ -74,57 +75,32 @@ object IngestBench {
       df.write.format("noop").mode("overwrite").save()
 
     // cold start: drop + rebuild every standing store for the dir
-    val gTbl = operators.Similarity.graphStoreTable(d)
-    val stores = Seq(
-      operators.Dedup.fpStoreTable(d), operators.Dedup.bandStoreTable(d),
-      operators.TextAnalysis.anchorStoreTable(d),
-      gTbl, operators.Similarity.graphNodesTable(gTbl),
-      operators.Similarity.ivfStoreTable(d))
-    stores.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val buildSec = timed {
-      operators.Dedup.ensureFpStore(spark, d)
-      operators.Dedup.ensureBandStore(spark, d)
-      operators.TextAnalysis.ensureAnchorStore(spark, d)
-      operators.Similarity.ensureGraphStore(spark, d)
-      operators.Similarity.ensureIvfStore(spark, d)
-    }
+    sources.Stores.all.flatMap(_.tables(d))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val buildSec = timed(sources.Stores.all.foreach(_.ensure(spark, d)))
     println(s"""{"cycle":0,"build_all_sec":$buildSec}""")
 
     val totals = scala.collection.mutable.LinkedHashMap
       .empty[String, Double].withDefaultValue(0.0)
     for (c <- 1 to cycles) {
-      val docs = docsBatch(c)
-      val vecs = vecsBatch(c)
-      val stages = scala.collection.mutable.LinkedHashMap[String, Double](
-        "probe_fp" -> timed(sink(
-          operators.Dedup.incrementalDedupStoreOver(spark, d, docs))),
-        "probe_band" -> timed(sink(
-          operators.Dedup.neardupAdmitStoreOver(spark, d, docs))),
-        "probe_anchor" -> timed(sink(
-          operators.TextAnalysis.spanAdmitStoreOver(spark, d, docs))),
-        "append_fp" -> timed(
-          operators.Dedup.appendFpStore(spark, d, docs)),
-        "append_band" -> timed(
-          operators.Dedup.appendBandStore(spark, d, docs)),
-        "append_anchor" -> timed(
-          operators.TextAnalysis.appendAnchorStore(spark, d, docs)),
-        "append_graph" -> timed(
-          operators.Similarity.appendGraphStore(spark, gTbl, vecs)),
-        "append_ivf" -> timed(
-          operators.Similarity.appendIvfStore(spark, d, vecs)),
-        "serve_graph" -> timed(sink(
-          operators.Similarity.qAnnGraphStore(spark, d))))
+      val batch = Map[sources.Stores.Grain, DataFrame](
+        sources.Stores.Documents -> docsBatch(c),
+        sources.Stores.Embeddings -> vecsBatch(c))
+      val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+      // admitting stores probe the incoming batch before the append;
+      // the others serve their fixed query slice from the grown store
+      for (st <- sources.Stores.all) {
+        val b = batch(st.grain)
+        st.admit.foreach(p =>
+          stages(s"probe_${st.family}") = timed(sink(p(spark, d, b))))
+        stages(s"append_${st.family}") = timed(st.append(spark, d, b))
+        if (st.admit.isEmpty)
+          stages(s"serve_${st.family}") = timed(sink(st.probe(spark, d)))
+      }
       val compacted = c == (cycles + 1) / 2
-      stages("compact_all") = if (compacted) timed {
-        sources.Sources.compactBucketed(spark,
-          operators.Dedup.fpStoreTable(d), "fp")
-        sources.Sources.compactBucketed(spark,
-          operators.Dedup.bandStoreTable(d), "bb")
-        sources.Sources.compactBucketed(spark,
-          operators.TextAnalysis.anchorStoreTable(d), "h")
-        operators.Similarity.compactGraphStore(spark, gTbl)
-        operators.Similarity.compactIvfStore(spark, d)
-      } else 0.0
+      stages("compact_all") = if (compacted)
+        timed(sources.Stores.all.foreach(_.compact(spark, d)))
+      else 0.0
       stages.foreach { case (k, v) => totals(k) += v }
       val cycleSec = stages.values.sum
       totals("cycle") += cycleSec

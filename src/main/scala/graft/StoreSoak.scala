@@ -33,6 +33,25 @@ object StoreSoak {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** Most data files in one bucket (bucketed tables) or partition
+    * directory (partitioned ones) across `tables` — 1 once compaction
+    * has restored the invariant. */
+  private def maxFilesPerBucket(spark: SparkSession,
+                                tables: Seq[String]): Int =
+    tables.flatMap { t =>
+      val root = new org.apache.hadoop.fs.Path(sources.Stores.location(spark, t))
+      val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(root, true)
+      val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (p.getName.startsWith("part-"))
+          keys += "_(\\d{5})\\.c\\d+".r.findFirstMatchIn(p.getName)
+            .map(_.group(1)).getOrElse(p.getParent.toString)
+      }
+      keys.groupBy(identity).values.map(_.size)
+    }.max
+
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val cycles = if (args.length > 1) args(1).toInt else 3
@@ -40,157 +59,63 @@ object StoreSoak {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val batch = spark.read.parquet(s"$d/documents.parquet")
-      .filter(pmod($"doc_id", lit(10)) === 3)
-    // a derived ALL-NOVEL batch per cycle: ids shifted out of the key
-    // space, a per-cycle token inserted between every word (the
-    // ScaleUp universe-token idiom) so EVERY fingerprint, shingle,
-    // minhash band, and anchor window is new — each family's store
-    // grows by a full batch per cycle. The cycle token is ALSO
+    // a derived ALL-NOVEL batch per cycle at each grain, so each
+    // family's store grows by a full batch per cycle while the probe
+    // stays fixed. Documents: ids shifted out of the key space, a
+    // per-cycle token inserted between every word (the ScaleUp
+    // universe-token idiom) so EVERY fingerprint, shingle, minhash
+    // band, and anchor window is new. The cycle token is ALSO
     // prepended unconditionally: a tokenless doc (empty or one-word
     // text) has no spaces for the replace to rewrite and would
     // otherwise be byte-identical — hence NOT novel — every cycle,
-    // flaking the monotone-growth assertions.
-    def novel(c: Int): DataFrame = batch
-      .withColumn("doc_id", $"doc_id" + lit(c * 1000000000L))
-      .withColumn("text", concat(lit(s"soak$c "),
-        regexp_replace($"text", " ", s" soak$c ")))
-
-    case class Family(name: String, table: String, bucketCol: String,
-                      ensure: () => Unit, probe: () => DataFrame,
-                      append: DataFrame => Unit)
-    val fams = Seq(
-      Family("fp", operators.Dedup.fpStoreTable(d), "fp",
-        () => { operators.Dedup.ensureFpStore(spark, d); () },
-        () => operators.Dedup.qIncrementalDedupStore(spark, d),
-        df => operators.Dedup.appendFpStore(spark, d, df)),
-      Family("band", operators.Dedup.bandStoreTable(d), "bb",
-        () => { operators.Dedup.ensureBandStore(spark, d); () },
-        () => operators.Dedup.qNeardupAdmitStore(spark, d),
-        df => operators.Dedup.appendBandStore(spark, d, df)),
-      Family("anchor", operators.TextAnalysis.anchorStoreTable(d), "h",
-        () => { operators.TextAnalysis.ensureAnchorStore(spark, d); () },
-        () => operators.TextAnalysis.qSpanAdmitStore(spark, d),
-        df => operators.TextAnalysis.appendAnchorStore(spark, d, df)))
-
-    for (f <- fams) {
-      spark.sql(s"DROP TABLE IF EXISTS ${f.table}")
-      val (_, buildSec) = timed { f.ensure() }
-      println(s"""{"family":"${f.name}","cycle":0,"build_sec":$buildSec}""")
-      for (c <- 1 to cycles) {
-        // probe the CONSTANT batch against the growing store; min of
-        // 2 reps (first run also settles AQE / code cache)
-        val (_, p1) = timed {
-          f.probe().write.format("noop").mode("overwrite").save()
-        }
-        val (_, p2) = timed {
-          f.probe().write.format("noop").mode("overwrite").save()
-        }
-        val (_, aSec) = timed { f.append(novel(c)) }
-        spark.catalog.refreshTable(f.table)
-        val rows = spark.table(f.table).count()
-        val compacted = c == (cycles + 1) / 2
-        val cSec = if (compacted) {
-          val (_, t) = timed {
-            sources.Sources.compactBucketed(spark, f.table, f.bucketCol)
-          }
-          t
-        } else 0.0
-        println(s"""{"family":"${f.name}","cycle":$c,""" +
-          s""""probe_sec":${math.min(p1, p2)},"append_sec":$aSec,""" +
-          s""""store_rows":$rows,"compacted":$compacted,""" +
-          s""""compact_sec":$cSec}""")
-      }
-      // final hygiene check: compact and count files per bucket
-      sources.Sources.compactBucketed(spark, f.table, f.bucketCol)
-      val loc = spark.sql(s"DESCRIBE TABLE EXTENDED ${f.table}")
-        .filter($"col_name" === "Location").head.getString(1)
-      val fs = new org.apache.hadoop.fs.Path(loc)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(loc))
-        .count(_.getPath.getName.startsWith("part-"))
-      println(s"""{"family":"${f.name}","final_files":$files,""" +
-        s""""buckets":${sources.Sources.bucketCountOf(spark, f.table)}}""")
-    }
-
-    // ---- vector families (graph / IVF) — the same lifecycle at the
-    // embedding grain: probe a CONSTANT bounded query search, append a
-    // per-cycle ALL-NOVEL vector batch, compact mid-run. Novel
-    // vectors: ids shifted out of the key space AND every component
-    // shifted by a per-cycle constant, so each cycle's batch is new to
-    // the graph's node table (eh changes with the bytes) and lands in
-    // real IVF cells — both stores grow by a full rep batch per cycle
-    // while the probe stays fixed, making cycle timings comparable.
-    val vbatch = spark.read.parquet(s"$d/embeddings.parquet")
+    // flaking the monotone-growth assertions. Vectors: ids shifted
+    // AND every component shifted by a per-cycle constant, so each
+    // batch is new to the graph's node table (eh changes with the
+    // bytes) and lands in real IVF cells.
+    val docs = spark.read.parquet(s"$d/documents.parquet")
+      .filter(pmod($"doc_id", lit(10)) === 3)
+    val vecs = spark.read.parquet(s"$d/embeddings.parquet")
       .filter(pmod($"vec_id", lit(10)) === 3)
       .select($"vec_id", $"embedding")
-    def vnovel(c: Int): DataFrame = vbatch
-      .withColumn("vec_id", $"vec_id" + lit(c * 1000000000L))
-      .withColumn("embedding",
-        transform($"embedding", x => x + lit(c * 0.001f)))
+    def novel(grain: sources.Stores.Grain, c: Int): DataFrame = grain match {
+      case sources.Stores.Documents => docs
+        .withColumn("doc_id", $"doc_id" + lit(c * 1000000000L))
+        .withColumn("text", concat(lit(s"soak$c "),
+          regexp_replace($"text", " ", s" soak$c ")))
+      case sources.Stores.Embeddings => vecs
+        .withColumn("vec_id", $"vec_id" + lit(c * 1000000000L))
+        .withColumn("embedding",
+          transform($"embedding", x => x + lit(c * 0.001f)))
+    }
 
-    val gTbl = operators.Similarity.graphStoreTable(d)
-    val iTbl = operators.Similarity.ivfStoreTable(d)
-    case class VFamily(name: String, tables: Seq[String],
-                       ensure: () => Unit, probe: () => DataFrame,
-                       append: DataFrame => Unit, compact: () => Unit)
-    val vfams = Seq(
-      VFamily("graph",
-        Seq(gTbl, operators.Similarity.graphNodesTable(gTbl)),
-        () => { operators.Similarity.ensureGraphStore(spark, d); () },
-        () => operators.Similarity.qAnnGraphStore(spark, d),
-        df => operators.Similarity.appendGraphStore(spark, gTbl, df),
-        () => operators.Similarity.compactGraphStore(spark, gTbl)),
-      VFamily("ivf", Seq(iTbl),
-        () => { operators.Similarity.ensureIvfStore(spark, d); () },
-        () => operators.Similarity.qAnnIvfStore(spark, d),
-        df => operators.Similarity.appendIvfStore(spark, d, df),
-        () => operators.Similarity.compactIvfStore(spark, d)))
-
-    for (f <- vfams) {
-      f.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      val (_, buildSec) = timed { f.ensure() }
-      println(s"""{"family":"${f.name}","cycle":0,"build_sec":$buildSec}""")
+    for (st <- sources.Stores.all) {
+      val tables = st.tables(d)
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      val (_, buildSec) = timed { st.ensure(spark, d) }
+      println(s"""{"family":"${st.family}","cycle":0,"build_sec":$buildSec}""")
       for (c <- 1 to cycles) {
+        // probe the CONSTANT slice against the growing store; min of
+        // 2 reps (first run also settles AQE / code cache)
         val (_, p1) = timed {
-          f.probe().write.format("noop").mode("overwrite").save()
+          st.probe(spark, d).write.format("noop").mode("overwrite").save()
         }
         val (_, p2) = timed {
-          f.probe().write.format("noop").mode("overwrite").save()
+          st.probe(spark, d).write.format("noop").mode("overwrite").save()
         }
-        val (_, aSec) = timed { f.append(vnovel(c)) }
-        f.tables.foreach(spark.catalog.refreshTable)
-        val rows = spark.table(f.tables.head).count()
+        val (_, aSec) = timed { st.append(spark, d, novel(st.grain, c)) }
+        tables.foreach(spark.catalog.refreshTable)
+        val rows = spark.table(tables.head).count()
         val compacted = c == (cycles + 1) / 2
-        val cSec = if (compacted) { val (_, t) = timed { f.compact() }; t }
-                   else 0.0
-        println(s"""{"family":"${f.name}","cycle":$c,""" +
+        val cSec = if (compacted) timed { st.compact(spark, d) }._2 else 0.0
+        println(s"""{"family":"${st.family}","cycle":$c,""" +
           s""""probe_sec":${math.min(p1, p2)},"append_sec":$aSec,""" +
           s""""store_rows":$rows,"compacted":$compacted,""" +
           s""""compact_sec":$cSec}""")
       }
-      // final hygiene: compact, then check the family's restored
-      // invariant — graph: degree cap back under M + diversity slots;
-      // ivf: one file per cell directory
-      f.compact()
-      f.tables.foreach(spark.catalog.refreshTable)
-      if (f.name == "graph") {
-        val maxDeg = spark.table(gTbl).groupBy($"src")
-          .agg(count(lit(1)).as("deg")).agg(max($"deg")).head.getLong(0)
-        println(s"""{"family":"graph","final_max_degree":$maxDeg,""" +
-          s""""cap":${operators.Similarity.GraphMaxDegree}}""")
-      } else {
-        val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $iTbl")
-          .filter($"col_name" === "Location").head.getString(1)
-        val fs = new org.apache.hadoop.fs.Path(loc)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val cellDirs = fs.listStatus(new org.apache.hadoop.fs.Path(loc))
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-        val maxFiles = cellDirs.map(cd => fs.listStatus(cd.getPath)
-          .count(_.getPath.getName.startsWith("part-"))).max
-        println(s"""{"family":"ivf","cells":${cellDirs.length},""" +
-          s""""max_files_per_cell":$maxFiles}""")
-      }
+      // final hygiene: compact, then check one file per bucket/cell
+      st.compact(spark, d)
+      println(s"""{"family":"${st.family}",""" +
+        s""""final_max_files_per_bucket":${maxFilesPerBucket(spark, tables)}}""")
     }
     spark.stop()
   }

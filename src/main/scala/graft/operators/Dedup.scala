@@ -87,26 +87,10 @@ object Dedup {
         ($"n_batch" - coalesce($"n_dup", lit(0L))).as("n_novel"))
   }
 
-  /** Bucket count for a NEW standing store: scale-adaptive
-    * ([[graft.Tables.clusterParts]] over the corpus frame — ~1 bucket
-    * per 128 KB of compressed input, clamped at the session shuffle
-    * parallelism). A fixed 32 paid 32 scan tasks per probe (and per
-    * beam-walk hop) on KB-scale gate corpora; at production bytes the
-    * clamp lands on the session parallelism, the old constant.
-    * Appends/compactions NEVER use this — they read the standing
-    * table's own count from the catalog
-    * ([[graft.sources.Sources.bucketCountOf]]), the single source of
-    * truth the bucketed-append validation must agree with. */
-  private[graft] def storeBuckets(corpus: org.apache.spark.sql.DataFrame): Int =
-    graft.Tables.clusterParts(corpus)
-
-  /** Deterministic store table name per corpus directory (the catalog
-    * key a cross-session ingest job would agree on). */
-  private[graft] def fpStoreTable(d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_fpstore_${md.take(12)}"
-  }
+  /** The fingerprint store's table for corpus dir `d`
+    * ([[graft.sources.Stores.tableName]]). */
+  private[graft] def fpStoreTable(d: String): String =
+    graft.sources.Stores.tableName("fp", d)
 
   /** Build (if absent) the STANDING FINGERPRINT STORE for corpus dir
     * `d`: the corpus side of [[qIncrementalDedup]] — (doc_id, source,
@@ -121,17 +105,12 @@ object Dedup {
     * never re-reads corpus TEXT, only the narrow fp column. */
   private[graft] def ensureFpStore(s: SparkSession, d: String): String = {
     import s.implicits._
-    val tbl = fpStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    if (!s.catalog.tableExists(tbl)) {
-      val corpus = Tables.documents(s, d)
+    graft.sources.Stores.ensureBucketed(s, fpStoreTable(d), "fp",
+        Tables.documents(s, d)) {
+      Tables.documents(s, d)
         .filter(pmod($"doc_id", lit(BatchMod)) =!= BatchRem)
         .select($"doc_id", $"source", fingerprint($"text").as("fp"))
-      graft.sources.Sources.writeBucketed(corpus, tbl, "fp",
-        storeBuckets(Tables.documents(s, d)),
-        path = Some(s"/tmp/graft_fpstore/$tbl"))
     }
-    tbl
   }
 
   /** Close the ingest loop on the standing fingerprint store: append
@@ -153,15 +132,11 @@ object Dedup {
                                    docs: DataFrame): Unit = {
     import s.implicits._
     val tbl = fpStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    require(s.catalog.tableExists(tbl),
-      s"fingerprint store $tbl does not exist — build it with ensureFpStore")
-    graft.sources.Sources.writeBucketed(
+    graft.sources.Stores.appendBucketed(s, tbl, "fp") {
       docs.select($"doc_id", $"source", fingerprint($"text").as("fp"))
         .join(s.table(tbl).select($"fp").hint("merge"),
-          Seq("fp"), "left_anti"),
-      tbl, "fp", graft.sources.Sources.bucketCountOf(s, tbl),
-      mode = org.apache.spark.sql.SaveMode.Append)
+          Seq("fp"), "left_anti")
+    }
   }
 
   /** INCREMENTAL dedup against the PERSISTED fingerprint store — the
@@ -199,13 +174,9 @@ object Dedup {
         ($"n_batch" - coalesce($"n_dup", lit(0L))).as("n_novel"))
   }
 
-  /** Deterministic band-store table name per corpus dir (the
-    * [[fpStoreTable]] convention at the LSH grain). */
-  private[graft] def bandStoreTable(d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_bandstore_${md.take(12)}"
-  }
+  /** The band store's table for corpus dir `d`. */
+  private[graft] def bandStoreTable(d: String): String =
+    graft.sources.Stores.tableName("band", d)
 
   /** Build (if absent) the STANDING LSH BAND STORE for corpus dir
     * `d`: the corpus side of [[qNeardupAdmitStore]] — every banded
@@ -220,19 +191,14 @@ object Dedup {
     * zero corpus-side exchange, corpus text never re-shingled. */
   private[graft] def ensureBandStore(s: SparkSession, d: String): String = {
     import s.implicits._
-    val tbl = bandStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    if (!s.catalog.tableExists(tbl)) {
-      val corpus = minhashBandedOf(
+    graft.sources.Stores.ensureBucketed(s, bandStoreTable(d), "bb",
+        Tables.documents(s, d)) {
+      minhashBandedOf(
         Tables.documents(s, d)
           .filter(pmod($"doc_id", lit(BatchMod)) =!= BatchRem))
         .select(concat_ws("|", $"band", $"bucket").as("bb"), $"sig")
         .distinct()
-      graft.sources.Sources.writeBucketed(corpus, tbl, "bb",
-        storeBuckets(Tables.documents(s, d)),
-        path = Some(s"/tmp/graft_fpstore/$tbl"))
     }
-    tbl
   }
 
   /** Close the ingest loop on the standing band store: append an
@@ -250,27 +216,23 @@ object Dedup {
       graft.functions.Cp.scoped(s) {
     import s.implicits._
     val tbl = bandStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    require(s.catalog.tableExists(tbl),
-      s"band store $tbl does not exist — build it with ensureBandStore")
-    val batch = minhashBandedOf(docs)
-      .select(concat_ws("|", $"band", $"bucket").as("bb"), $"sig")
-      .distinct()
-      .transform(graft.functions.Cp.local) // read twice: hits + anti
-    // candidate matches ride the bb merge join (store side streams off
-    // its buckets — a composite (bb, sig) join key would re-shuffle
-    // the standing table by both columns instead); exact sig equality
-    // is verified on the bb-colliding pairs, and the anti-join then
-    // runs batch × batch-sized hits
-    val hits = batch
-      .join(s.table(tbl).withColumnRenamed("sig", "sig_st").hint("merge"),
-        Seq("bb"))
-      .filter($"sig" === $"sig_st")
-      .select($"bb", $"sig")
-    graft.sources.Sources.writeBucketed(
-      batch.join(hits, Seq("bb", "sig"), "left_anti"),
-      tbl, "bb", graft.sources.Sources.bucketCountOf(s, tbl),
-      mode = org.apache.spark.sql.SaveMode.Append)
+    graft.sources.Stores.appendBucketed(s, tbl, "bb") {
+      val batch = minhashBandedOf(docs)
+        .select(concat_ws("|", $"band", $"bucket").as("bb"), $"sig")
+        .distinct()
+        .transform(graft.functions.Cp.local) // read twice: hits + anti
+      // candidate matches ride the bb merge join (store side streams off
+      // its buckets — a composite (bb, sig) join key would re-shuffle
+      // the standing table by both columns instead); exact sig equality
+      // is verified on the bb-colliding pairs, and the anti-join then
+      // runs batch × batch-sized hits
+      val hits = batch
+        .join(s.table(tbl).withColumnRenamed("sig", "sig_st").hint("merge"),
+          Seq("bb"))
+        .filter($"sig" === $"sig_st")
+        .select($"bb", $"sig")
+      batch.join(hits, Seq("bb", "sig"), "left_anti")
+    }
   }
 
   /** NEAR-DUP ADMISSION against the PERSISTED band store — the third

@@ -474,14 +474,9 @@ object Similarity {
   def qAnnIvf(s: SparkSession, d: String): DataFrame =
     ivfSearch(s, Tables.embeddings(s, d), pinnedCentroids(s, d))
 
-  /** Deterministic IVF-store table name per corpus dir (the
-    * [[graft.operators.Dedup.fpStoreTable]] convention at the
-    * embedding grain). */
-  private[graft] def ivfStoreTable(d: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_ivfstore_${md.take(12)}"
-  }
+  /** The IVF store's table for corpus dir `d`. */
+  private[graft] def ivfStoreTable(d: String): String =
+    graft.sources.Stores.tableName("ivf", d)
 
   /** Build (if absent) the STANDING IVF INDEX STORE for corpus dir
     * `d` — the fourth member of the standing-store family
@@ -508,8 +503,7 @@ object Similarity {
                                     cents: Array[Array[Float]]): String = {
     import s.implicits._
     val tbl = ivfStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    if (!s.catalog.tableExists(tbl)) {
+    graft.sources.Stores.ensureTables(s, tbl) {
       val centroids = if (cents != null) cents else pinnedCentroids(s, d)
       Tables.embeddings(s, d)
         .select($"vec_id", $"embedding",
@@ -517,10 +511,9 @@ object Similarity {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("cell")
         .format("parquet")
-        .option("path", s"/tmp/graft_fpstore/$tbl")
+        .option("path", graft.sources.Stores.path(tbl))
         .saveAsTable(tbl)
     }
-    tbl
   }
 
   /** Close the ingest loop on the standing IVF store: assign a new
@@ -537,9 +530,7 @@ object Similarity {
       graft.functions.Cp.scoped(s) {
     import s.implicits._
     val tbl = ivfStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    require(s.catalog.tableExists(tbl),
-      s"IVF store $tbl does not exist — build it with ensureIvfStore")
+    graft.sources.Stores.requireTables(s, tbl)
     val centroids = pinnedCentroids(s, d)
     val batch = graft.functions.Cp.local(
       vecs.select($"vec_id", $"embedding",
@@ -639,8 +630,6 @@ object Similarity {
   // bit-identical to the undiversified build.
   private val GraphDivTau = 0.999
   private val GraphDivSlots = 4
-  // the degree invariant compaction restores (soak/spec gate)
-  private[graft] val GraphMaxDegree = GraphM + GraphDivSlots
 
   /** GRAPH-BASED ANN (the NSW/DiskANN family) — beam search over a
     * bounded-degree neighbor graph, the recall/latency frontier past
@@ -764,8 +753,7 @@ object Similarity {
     * scan that re-attaches every family member — the final top-k
     * ranks members by (cos DESC, id ASC), id-exact against brute
     * force even on replica-heavy corpora. */
-  private[graft] def graphSearch(emb: DataFrame, edges: DataFrame,
-                                 pushFrontier: Boolean = false): DataFrame = {
+  private[graft] def graphSearch(emb: DataFrame, edges: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
     val q = emb.filter($"vec_id" < NQueries)
@@ -777,7 +765,7 @@ object Similarity {
     val ent = emb.filter($"vec_id" < GraphEntries)
       .groupBy($"embedding").agg(min($"vec_id").as("vec_id"))
       .select($"vec_id", $"embedding".as("rv"))
-    val visited = beamWalk(q, ent, edges, pushFrontier,
+    val visited = beamWalk(q, ent, edges,
       broadcastBeam = true, carryVectors = true)
     // expand visited reps back to ids: the distinct (rep, vector) set
     // is bounded (≤ entries + hops×beam×degree per query), so it
@@ -823,7 +811,7 @@ object Similarity {
     * store's bucket granularity, store side streams off its files)
     * for insert batches. */
   private def beamWalk(q: DataFrame, ent: DataFrame, edges: DataFrame,
-                       pushFrontier: Boolean, broadcastBeam: Boolean,
+                       broadcastBeam: Boolean,
                        carryVectors: Boolean): DataFrame = {
     val s = q.sparkSession
     import s.implicits._
@@ -851,24 +839,9 @@ object Similarity {
           beamTop.select($"query_id", $"vec_id".as("src"))
             .join(broadcast(q), Seq("query_id"))
             .select($"query_id", $"qv", $"src")
-      // pushFrontier: collect the bounded frontier src set (≤ queries
-      // × beam) and push it into the adjacency SCAN as a filter —
-      // per-hop READ I/O becomes the frontier's buckets/row-groups
-      // instead of a full store scan (the broadcast join alone bounds
-      // shuffle volume, not read volume). Results are identical either
-      // way. This pays only when the standing store dwarfs the page
-      // cache (the 100 TB serving shape): at bench scale the per-hop
-      // collect job + fresh filtered scan MORE than doubled the walk
-      // (6.6 → 16.6 s sf10 — BASELINE.md wave 4), so the shipped
-      // queries keep it OFF and deployments flip it at store scale.
-      val edgesHop = if (pushFrontier) {
-        val srcs = beam.select($"src").distinct().collect()
-          .map(r => Long.box(r.getLong(0))).toSeq
-        edges.filter($"src".isin(srcs: _*))
-      } else edges
       val joined =
-        if (broadcastBeam) broadcast(beam).join(edgesHop, Seq("src"))
-        else beam.join(edgesHop.hint("merge"), Seq("src"))
+        if (broadcastBeam) broadcast(beam).join(edges, Seq("src"))
+        else beam.join(edges.hint("merge"), Seq("src"))
       // score MAP-SIDE on the joined pair; in narrow mode only the
       // 24 B scalar rows shuffle (duplicate (query, dst) collisions
       // share qv/dv, so the post-score dedup keeps a deterministic cos)
@@ -895,13 +868,9 @@ object Similarity {
     visited
   }
 
-  /** Deterministic graph-store table name per corpus dir (the
-    * [[graft.operators.Dedup.fpStoreTable]] convention). */
-  private[graft] def graphStoreTable(d: String): String = {
-    val md = MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_graphstore_${md.take(12)}"
-  }
+  /** The graph store's (edge) table for corpus dir `d`. */
+  private[graft] def graphStoreTable(d: String): String =
+    graft.sources.Stores.tableName("graph", d)
 
   /** Build (if absent) the STANDING NEIGHBOR-GRAPH STORE for corpus
     * dir `d`: the [[graphEdgesOf]] adjacency — (src, dst, dv) with the
@@ -929,23 +898,20 @@ object Similarity {
   private[graft] def ensureGraphStoreOver(s: SparkSession, emb: DataFrame,
                                           tbl: String): String = {
     import s.implicits._
-    graft.sources.Sources.recoverRotation(s, tbl)
-    graft.sources.Sources.recoverRotation(s, graphNodesTable(tbl))
-    if (!s.catalog.tableExists(tbl)) graft.functions.Cp.scoped(s) {
-      val reps = graphRepsOf(emb).transform(graft.functions.Cp.local)
-      // both tables share one adaptive count (sized off the embedding
-      // frame): the adjacency is N*M rows of (long, long, vector), the
-      // node table N rows — same order of magnitude
-      val nb = graft.operators.Dedup.storeBuckets(emb)
-      graft.sources.Sources.writeBucketed(
-        graphEdgesFromReps(emb, reps), tbl, "src", nb,
-        path = Some(s"/tmp/graft_fpstore/$tbl"))
-      graft.sources.Sources.writeBucketed(
-        reps.select(xxhash64($"embedding").as("eh"), $"vec_id", $"embedding"),
-        graphNodesTable(tbl), "eh", nb,
-        path = Some(s"/tmp/graft_fpstore/${graphNodesTable(tbl)}"))
+    graft.sources.Stores.ensureTables(s, tbl, graphNodesTable(tbl)) {
+      graft.functions.Cp.scoped(s) {
+        val reps = graphRepsOf(emb).transform(graft.functions.Cp.local)
+        // both tables share one adaptive count (sized off the embedding
+        // frame): the adjacency is N*M rows of (long, long, vector), the
+        // node table N rows — same order of magnitude
+        val nb = graft.sources.Stores.buckets(emb)
+        graft.sources.Stores.create(
+          graphEdgesFromReps(emb, reps), tbl, "src", nb)
+        graft.sources.Stores.create(
+          reps.select(xxhash64($"embedding").as("eh"), $"vec_id", $"embedding"),
+          graphNodesTable(tbl), "eh", nb)
+      }
     }
-    tbl
   }
 
   /** DiskANN-style INCREMENTAL MAINTENANCE of a standing graph store —
@@ -971,10 +937,7 @@ object Similarity {
       graft.functions.Cp.scoped(s) {
     import s.implicits._
     val tbln = graphNodesTable(tbl)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    graft.sources.Sources.recoverRotation(s, tbln)
-    require(s.catalog.tableExists(tbl) && s.catalog.tableExists(tbln),
-      s"graph store $tbl/$tbln does not exist — build it with ensureGraphStore")
+    graft.sources.Stores.requireTables(s, tbl, tbln)
     val batchReps = graphRepsOf(vecs)
       .select(xxhash64($"embedding").as("eh"), $"vec_id", $"embedding")
       .transform(graft.functions.Cp.local) // read twice: hits + anti
@@ -1037,7 +1000,7 @@ object Similarity {
     // worst case, so the beam must never broadcast (and the frontier
     // src set is batch-sized — too wide for a useful scan filter)
     val visited = beamWalk(q, ent, s.table(tbl),
-      pushFrontier = false, broadcastBeam = false, carryVectors = false)
+      broadcastBeam = false, carryVectors = false)
     val wA = Window.partitionBy($"query_id")
       .orderBy($"cos".desc, $"vec_id".asc)
     val wD = Window.partitionBy($"query_id")
@@ -1062,14 +1025,9 @@ object Similarity {
       .join(broadcast(newReps.select($"vec_id".as("src"),
         $"embedding".as("nv"))), Seq("src"))
       .select($"dst".as("src"), $"src".as("dst"), $"nv".as("dv"))
-    graft.sources.Sources.writeBucketed(
-      forward.unionByName(back),
-      tbl, "src", graft.sources.Sources.bucketCountOf(s, tbl),
-      mode = org.apache.spark.sql.SaveMode.Append)
-    graft.sources.Sources.writeBucketed(
-      newReps.select($"eh", $"vec_id", $"embedding"),
-      tbln, "eh", graft.sources.Sources.bucketCountOf(s, tbln),
-      mode = org.apache.spark.sql.SaveMode.Append)
+    graft.sources.Stores.appendRows(s, forward.unionByName(back), tbl, "src")
+    graft.sources.Stores.appendRows(s,
+      newReps.select($"eh", $"vec_id", $"embedding"), tbln, "eh")
   }
 
   /** Close the graph store's maintenance loop: re-apply the build's
@@ -1129,16 +1087,14 @@ object Similarity {
     * member re-attachment see the full corpus. The oracle proves the
     * whole maintenance path: every inserted edge, every hop. */
   def qAnnGraphIngest(s: SparkSession, d: String): DataFrame =
-    graphSearch(Tables.embeddings(s, d),
-      s.table(ensureIngestGraphStore(s, d)), pushFrontier = false)
+    graphSearch(Tables.embeddings(s, d), s.table(ensureIngestGraphStore(s, d)))
 
   /** Graph ANN against the STANDING adjacency store — same walk, same
     * results, same oracle as [[qAnnGraph]] (the edge build is
     * deterministic, so the persisted rows are identical); the index
     * build cost moves to ingest time where it belongs. */
   def qAnnGraphStore(s: SparkSession, d: String): DataFrame =
-    graphSearch(Tables.embeddings(s, d), s.table(ensureGraphStore(s, d)),
-      pushFrontier = false)
+    graphSearch(Tables.embeddings(s, d), s.table(ensureGraphStore(s, d)))
 
   /** NEIGHBOR-GRAPH HEALTH CENSUS — the index-observability readout
     * for the graph-ANN family (what [[graft.operators.Dedup

@@ -422,13 +422,9 @@ object TextAnalysis {
       .orderBy($"source".asc)
   }
 
-  /** Deterministic anchor-store table name per corpus dir (the
-    * [[graft.operators.Dedup.fpStoreTable]] convention). */
-  private[graft] def anchorStoreTable(d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_anchorstore_${md.take(12)}"
-  }
+  /** The anchor store's table for corpus dir `d`. */
+  private[graft] def anchorStoreTable(d: String): String =
+    graft.sources.Stores.tableName("anchor", d)
 
   /** Build (if absent) the STANDING ANCHOR STORE for corpus dir `d`:
     * the DISTINCT [[SpanK]]-token window hashes of the standing corpus
@@ -439,19 +435,14 @@ object TextAnalysis {
     * pre-partitioned narrow (h)-only table. */
   private[graft] def ensureAnchorStore(s: SparkSession, d: String): String = {
     import s.implicits._
-    val tbl = anchorStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    if (!s.catalog.tableExists(tbl)) {
-      val corpus = Tables.documents(s, d)
+    graft.sources.Stores.ensureBucketed(s, anchorStoreTable(d), "h",
+        Tables.documents(s, d)) {
+      Tables.documents(s, d)
         .filter(pmod($"doc_id", lit(AdmitMod)) =!= AdmitRem)
         .select(explode(graft.functions.MinHash
           .shingleHash60(tokens($"text"), SpanK)).as("h"))
         .distinct()
-      graft.sources.Sources.writeBucketed(corpus, tbl, "h",
-        graft.operators.Dedup.storeBuckets(Tables.documents(s, d)),
-        path = Some(s"/tmp/graft_fpstore/$tbl"))
     }
-    tbl
   }
 
   /** Close the ingest loop on the standing anchor store: append an
@@ -469,15 +460,11 @@ object TextAnalysis {
                                        docs: DataFrame): Unit = {
     import s.implicits._
     val tbl = anchorStoreTable(d)
-    graft.sources.Sources.recoverRotation(s, tbl)
-    require(s.catalog.tableExists(tbl),
-      s"anchor store $tbl does not exist — build it with ensureAnchorStore")
-    graft.sources.Sources.writeBucketed(
+    graft.sources.Stores.appendBucketed(s, tbl, "h") {
       docs.select(explode(graft.functions.MinHash
           .shingleHash60(tokens($"text"), SpanK)).as("h")).distinct()
-        .join(s.table(tbl).hint("merge"), Seq("h"), "left_anti"),
-      tbl, "h", graft.sources.Sources.bucketCountOf(s, tbl),
-      mode = org.apache.spark.sql.SaveMode.Append)
+        .join(s.table(tbl).hint("merge"), Seq("h"), "left_anti")
+    }
   }
 
   /** SPAN-GRAIN ADMISSION against the PERSISTED anchor store — the

@@ -528,13 +528,6 @@ object Sources {
       .head.getString(1).trim.toInt
   }
 
-  /** [[compactBucketed]] with a content transform: rewrite a bucketed
-    * table in place (stage-and-rotate, same crash-safety) as
-    * `transform(raw files read)`, re-bucketed to one sorted file per
-    * bucket. This is how maintenance ops that must REMOVE rows (e.g.
-    * the graph store's degree re-prune) fit the append-only bucketed
-    * lifecycle: appends stack rows, the periodic rewrite restores the
-    * invariant. */
   /** Roll back a crashed [[rewriteBucketed]] rename rotation: the only
     * window with no table registered under the live name is between
     * the two renames (live → _cold, _cstage → live) — a crash there
@@ -571,58 +564,60 @@ object Sources {
   def compactPartitioned(s: SparkSession, table: String,
                          partCol: String): Unit = {
     import org.apache.spark.sql.functions.col
-    recoverRotation(s, table)
-    val loc = s.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .filter(col("col_name") === "Location")
-      .head.getString(1)
-    val newLoc =
-      if (loc.endsWith(".c")) loc.stripSuffix(".c") else loc + ".c"
-    val fs = new org.apache.hadoop.fs.Path(loc)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(newLoc), true)
-    val stage = table + "_cstage"
-    s.sql(s"DROP TABLE IF EXISTS $stage")
-    s.read.parquet(loc).repartition(col(partCol))
-      .write.partitionBy(partCol).format("parquet")
-      .option("path", newLoc).saveAsTable(stage)
-    val old = table + "_cold"
-    s.sql(s"DROP TABLE IF EXISTS $old")
-    s.sql(s"ALTER TABLE $table RENAME TO $old")
-    s.sql(s"ALTER TABLE $stage RENAME TO $table")
-    s.sql(s"DROP TABLE $old")
-    fs.delete(new org.apache.hadoop.fs.Path(loc), true)
-    s.catalog.refreshTable(table)
+    stageAndRotate(s, table) { (raw, stage, path) =>
+      raw.repartition(col(partCol))
+        .write.partitionBy(partCol).format("parquet")
+        .option("path", path).saveAsTable(stage)
+    }
   }
 
+  /** [[compactBucketed]] with a content transform: rewrite a bucketed
+    * table in place (stage-and-rotate, same crash-safety) as
+    * `transform(raw files read)`, re-bucketed to one sorted file per
+    * bucket. This is how maintenance ops that must REMOVE rows (e.g.
+    * the graph store's degree re-prune) fit the append-only bucketed
+    * lifecycle: appends stack rows, the periodic rewrite restores the
+    * invariant. */
   def rewriteBucketed(s: SparkSession, table: String, bucketCol: String,
                       nBuckets: Int,
                       transform: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
+    stageAndRotate(s, table) { (raw, stage, path) =>
+      writeBucketed(transform(raw).repartition(nBuckets, col(bucketCol)),
+        stage, bucketCol, nBuckets, path = Some(path))
+    }
+  }
+
+  /** The stage-and-rotate steps [[rewriteBucketed]] and
+    * [[compactPartitioned]] share: `write(raw, stage, path)` writes the
+    * rewritten copy of the live files `raw` as table `stage` at the
+    * sibling `path` (alternating `.c` suffix); the catalog names then
+    * rotate live → `_cold`, stage → live, and `_cold` is dropped, and
+    * only then are the superseded files deleted.
+    *
+    * `raw` reads the table's FILES, not the table: a bucketed-table
+    * scan exposes its hash partitioning, which makes the planner drop
+    * the repartition as redundant — and then auto-disable the bucketed
+    * scan anyway (nothing above needs it), so the write lands
+    * size-split across tasks and buckets stay multi-file. The plain
+    * path read has no partitioning to satisfy anything, so the
+    * repartition survives and each bucket lands in exactly one task →
+    * exactly one file. */
+  private def stageAndRotate(s: SparkSession, table: String)(
+      write: (DataFrame, String, String) => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
     recoverRotation(s, table)
-    val loc = s.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .filter(col("col_name") === "Location")
-      .head.getString(1)
+    val loc = Stores.location(s, table)
     val newLoc =
       if (loc.endsWith(".c")) loc.stripSuffix(".c") else loc + ".c"
     // resolve the filesystem OF THE TABLE LOCATION, not the default
     // scheme — on deployments where store paths live off the default
     // filesystem, FileSystem.get(conf) would delete the wrong paths
-    val fs = new org.apache.hadoop.fs.Path(loc)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(newLoc), true)
+    val fs = new Path(loc).getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(newLoc), true)
     val stage = table + "_cstage"
     s.sql(s"DROP TABLE IF EXISTS $stage")
-    // read the raw FILES, not the table: a bucketed-table scan exposes
-    // its hash partitioning, which makes the planner drop the
-    // repartition as redundant — and then auto-disable the bucketed
-    // scan anyway (nothing above needs it), so the write lands
-    // size-split across tasks and buckets stay multi-file. The plain
-    // path read has no partitioning to satisfy anything, so the
-    // repartition survives and each bucket lands in exactly one task →
-    // exactly one file.
-    writeBucketed(transform(s.read.parquet(loc))
-        .repartition(nBuckets, col(bucketCol)),
-      stage, bucketCol, nBuckets, path = Some(newLoc))
+    write(s.read.parquet(loc), stage, newLoc)
     // rename rotation (external tables: renames move only catalog
     // entries, never files) — no crash window without a live table
     val old = table + "_cold"
@@ -630,7 +625,7 @@ object Sources {
     s.sql(s"ALTER TABLE $table RENAME TO $old")
     s.sql(s"ALTER TABLE $stage RENAME TO $table")
     s.sql(s"DROP TABLE $old")
-    fs.delete(new org.apache.hadoop.fs.Path(loc), true)
+    fs.delete(new Path(loc), true)
     s.catalog.refreshTable(table)
   }
 }

@@ -1444,30 +1444,8 @@ object StreamingOps {
     * ingest-loop checkpoint-retention lesson). */
   def storeIngest(docs: DataFrame, corpusDir: String,
                   compactEvery: Int = 0) =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.functions.Cp.scoped(s) {
-            val b = graft.functions.Cp.local(batch.toDF())
-            graft.operators.Dedup.ensureFpStore(s, corpusDir)
-            graft.operators.Dedup.ensureBandStore(s, corpusDir)
-            graft.operators.TextAnalysis.ensureAnchorStore(s, corpusDir)
-            graft.operators.Dedup.appendFpStore(s, corpusDir, b)
-            graft.operators.Dedup.appendBandStore(s, corpusDir, b)
-            graft.operators.TextAnalysis.appendAnchorStore(s, corpusDir, b)
-          }
-          if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-            graft.sources.Sources.compactBucketed(s,
-              graft.operators.Dedup.fpStoreTable(corpusDir), "fp")
-            graft.sources.Sources.compactBucketed(s,
-              graft.operators.Dedup.bandStoreTable(corpusDir), "bb")
-            graft.sources.Sources.compactBucketed(s,
-              graft.operators.TextAnalysis.anchorStoreTable(corpusDir), "h")
-          }
-        }
-      }
+    ingestSink(docs, graft.sources.Stores.Documents, corpusDir,
+      compactEvery)(graft.functions.Cp.local)
 
   /** [[storeIngest]] at the EMBEDDING grain: each micro-batch of
     * (vec_id, embedding) rows inserts into the standing graph-ANN
@@ -1480,20 +1458,30 @@ object StreamingOps {
     * unchanged. */
   def vectorStoreIngest(vecs: DataFrame, corpusDir: String,
                         compactEvery: Int = 0) =
-    vecs.writeStream
+    ingestSink(vecs, graft.sources.Stores.Embeddings, corpusDir,
+      compactEvery)(identity)
+
+  /** The lifecycle sink both grains share: per non-empty micro-batch,
+    * ensure then append every store of `grain` (the batch passed
+    * through `share` once, inside one checkpoint scope), and every
+    * `compactEvery`-th batch compact them. */
+  private def ingestSink(rows: DataFrame, grain: graft.sources.Stores.Grain,
+                         corpusDir: String, compactEvery: Int)(
+      share: DataFrame => DataFrame) = {
+    val stores = graft.sources.Stores.all.filter(_.grain == grain)
+    rows.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          val gTbl = graft.operators.Similarity.ensureGraphStore(s, corpusDir)
-          graft.operators.Similarity.ensureIvfStore(s, corpusDir)
-          val b = batch.toDF()
-          graft.operators.Similarity.appendGraphStore(s, gTbl, b)
-          graft.operators.Similarity.appendIvfStore(s, corpusDir, b)
-          if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-            graft.operators.Similarity.compactGraphStore(s, gTbl)
-            graft.operators.Similarity.compactIvfStore(s, corpusDir)
+          graft.functions.Cp.scoped(s) {
+            val b = share(batch.toDF())
+            stores.foreach(_.ensure(s, corpusDir))
+            stores.foreach(_.append(s, corpusDir, b))
           }
+          if (compactEvery > 0 && (id + 1) % compactEvery == 0)
+            stores.foreach(_.compact(s, corpusDir))
         }
       }
+  }
 }

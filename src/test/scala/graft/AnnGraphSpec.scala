@@ -87,8 +87,7 @@ class AnnGraphSpec extends AnyFunSuite {
     operators.Similarity.appendGraphStore(spark, inc, b2)
     operators.Similarity.ensureGraphStoreOver(spark, emb, reb)
     def recall(tbl: String): Double = {
-      val g = operators.Similarity
-        .graphSearch(emb, spark.table(tbl), pushFrontier = true)
+      val g = operators.Similarity.graphSearch(emb, spark.table(tbl))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val b = operators.Similarity.qKnnBrute(spark, d).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -43,6 +43,11 @@ class IvfStoreSpec extends AnyFunSuite {
     assert(top0.length == 1 && top0.head.getLong(1) == 999999L,
       s"query 0's top neighbor must be the appended clone: ${after.mkString(", ")}")
     assert(top0.head.getDouble(3) == 1.0)
+    // compaction collapses the touched cells' files and keeps every row
+    val n = spark.table(tbl).count()
+    operators.Similarity.compactIvfStore(spark, d2)
+    assert(spark.table(tbl).count() === n,
+      "compaction must not change the store row count")
   }
 
   test("probe scan is partition-pruned to the probed cells") {

@@ -369,12 +369,13 @@ class SqlFrontDoorSpec extends AnyFunSuite {
   // append_store → probe, then compact_store → probe, driven on one
   // corpus dir purely via spark.sql(...), must equal the Scala
   // maintenance path driven on a SECOND dir with identical content —
-  // every probe bit-for-bit, every cycle. Covers the three store
-  // grains: fp (bucketed document store), graph (two-table adjacency
-  // + node store with the insertion walk), ivf (partitioned cell
-  // store). A SQL-only deployment can therefore run the whole loop —
-  // bootstrap, admit, append, compact — with no Scala entry point.
+  // every probe bit-for-bit, every cycle. Covers every registered
+  // store family: the bucketed document stores, the two-table graph
+  // store with its insertion walk and the partitioned IVF store. A
+  // SQL-only deployment can therefore run the whole loop — bootstrap,
+  // admit, append, compact — with no Scala entry point.
   test("sql: 2-cycle append_store/compact_store loop equals the Scala path") {
+    import graft.sources.Stores
     val sqlD = "/tmp/graft_sqlfd_ingest_sql"
     val scaD = "/tmp/graft_sqlfd_ingest_sca"
     for (d <- Seq(sqlD, scaD)) {
@@ -383,84 +384,61 @@ class SqlFrontDoorSpec extends AnyFunSuite {
       spark.read.parquet(s"$sf/embeddings.parquet")
         .write.mode("overwrite").parquet(d + "/embeddings.parquet")
     }
-    val fpT = Seq(operators.Dedup.fpStoreTable(sqlD),
-      operators.Dedup.fpStoreTable(scaD))
-    val gT = Seq(operators.Similarity.graphStoreTable(sqlD),
-      operators.Similarity.graphStoreTable(scaD))
-    val iT = Seq(operators.Similarity.ivfStoreTable(sqlD),
-      operators.Similarity.ivfStoreTable(scaD))
-    (fpT ++ gT ++ gT.map(operators.Similarity.graphNodesTable) ++ iT)
+    Stores.all.flatMap(st => st.tables(sqlD) ++ st.tables(scaD))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     // per-cycle all-novel batches (the StoreSoak idiom), identical
     // content for both dirs
-    def novelDocs(c: Int) = spark.read
-      .parquet(s"$sqlD/documents.parquet")
-      .filter(pmod($"doc_id", lit(10)) === 3)
-      .withColumn("doc_id", $"doc_id" + lit(c * 1000000000L))
-      .withColumn("text", concat(lit(s"soak$c "),
-        regexp_replace($"text", " ", s" soak$c ")))
-      .select($"doc_id", $"source", $"text")
-    def novelVecs(c: Int) = spark.read
-      .parquet(s"$sqlD/embeddings.parquet")
-      .filter(pmod($"vec_id", lit(10)) === 3)
-      .withColumn("vec_id", $"vec_id" + lit(c * 1000000000L))
-      .withColumn("embedding",
-        transform($"embedding", x => x + lit(c * 0.001f)))
-      .select($"vec_id", $"embedding")
-    case class Fam(name: String, view: Int => DataFrame,
-                   probeSql: String, probeScala: () => DataFrame,
-                   appendScala: DataFrame => Unit, compactScala: () => Unit)
-    val fams = Seq(
-      Fam("fp", novelDocs,
-        s"SELECT * FROM incremental_admit('$sqlD')",
-        () => operators.Dedup.qIncrementalDedupStore(spark, scaD),
-        df => { operators.Dedup.ensureFpStore(spark, scaD)
-          operators.Dedup.appendFpStore(spark, scaD, df) },
-        () => sources.Sources.compactBucketed(spark, fpT(1), "fp")),
-      Fam("graph", novelVecs,
-        s"SELECT * FROM ann_graph_store('$sqlD')",
-        () => operators.Similarity.qAnnGraphStore(spark, scaD),
-        df => { operators.Similarity.ensureGraphStore(spark, scaD)
-          operators.Similarity.appendGraphStore(spark, gT(1), df) },
-        () => operators.Similarity.compactGraphStore(spark, gT(1))),
-      Fam("ivf", novelVecs,
-        s"SELECT * FROM ann_ivf_store('$sqlD')",
-        () => operators.Similarity.qAnnIvfStore(spark, scaD),
-        df => { operators.Similarity.ensureIvfStore(spark, scaD)
-          operators.Similarity.appendIvfStore(spark, scaD, df) },
-        () => operators.Similarity.compactIvfStore(spark, scaD)))
-    for (f <- fams) {
+    def novel(grain: Stores.Grain, c: Int): DataFrame = grain match {
+      case Stores.Documents => spark.read
+        .parquet(s"$sqlD/documents.parquet")
+        .filter(pmod($"doc_id", lit(10)) === 3)
+        .withColumn("doc_id", $"doc_id" + lit(c * 1000000000L))
+        .withColumn("text", concat(lit(s"soak$c "),
+          regexp_replace($"text", " ", s" soak$c ")))
+        .select($"doc_id", $"source", $"text")
+      case Stores.Embeddings => spark.read
+        .parquet(s"$sqlD/embeddings.parquet")
+        .filter(pmod($"vec_id", lit(10)) === 3)
+        .withColumn("vec_id", $"vec_id" + lit(c * 1000000000L))
+        .withColumn("embedding",
+          transform($"embedding", x => x + lit(c * 0.001f)))
+        .select($"vec_id", $"embedding")
+    }
+    for (st <- Stores.all) {
+      val f = st.family
+      val probeSql = s"SELECT * FROM ${st.probeTvf}('$sqlD')"
       var lastRows = -1L
       for (c <- 1 to 2) {
-        f.view(c).createOrReplaceTempView("ing_batch")
+        novel(st.grain, c).createOrReplaceTempView("ing_batch")
         val status = spark.sql(
-          s"SELECT * FROM append_store('${f.name}', '$sqlD', 'ing_batch')")
+          s"SELECT * FROM append_store('$f', '$sqlD', 'ing_batch')")
           .collect()
-        assert(status.length == 1 && status(0).getString(0) == f.name)
+        assert(status.length == 1 && status(0).getString(0) == f)
         val sqlRows = status(0).getLong(2)
         assert(sqlRows > lastRows,
-          s"${f.name} cycle $c: append_store must grow the store " +
+          s"$f cycle $c: append_store must grow the store " +
             s"($lastRows -> $sqlRows)")
         lastRows = sqlRows
-        f.appendScala(f.view(c))
-        assert(rows(spark.sql(f.probeSql)) === rows(f.probeScala()),
-          s"${f.name} cycle $c: SQL probe must equal the Scala path")
+        st.ensure(spark, scaD)
+        st.append(spark, scaD, novel(st.grain, c))
+        assert(rows(spark.sql(probeSql)) === rows(st.probe(spark, scaD)),
+          s"$f cycle $c: SQL probe must equal the Scala path")
       }
-      val cStatus = spark.sql(
-        s"SELECT * FROM compact_store('${f.name}', '$sqlD')").collect()
-      // graph compaction re-applies the degree cap (it may REMOVE
-      // overflow edges); the other families' compactions only
-      // collapse files
-      if (f.name == "graph")
-        assert(cStatus(0).getLong(2) <= lastRows,
-          s"${f.name}: compaction must not add rows")
-      else
-        assert(cStatus(0).getLong(2) === lastRows,
-          s"${f.name}: compaction must not change the store row count")
-      f.compactScala()
-      assert(rows(spark.sql(f.probeSql)) === rows(f.probeScala()),
-        s"${f.name}: post-compaction SQL probe must equal the Scala path")
+      val cRows = spark.sql(
+        s"SELECT * FROM compact_store('$f', '$sqlD')").collect()(0).getLong(2)
+      // compaction never adds rows (graph compaction re-applies the
+      // degree cap, so it may remove overflow edges); the SQL verb
+      // leaves exactly the rows the Scala verb does
+      assert(cRows <= lastRows, s"$f: compaction must not add rows")
+      st.compact(spark, scaD)
+      assert(cRows === spark.table(st.tables(scaD).head).count(),
+        s"$f: compact_store must keep the rows the Scala compaction keeps")
+      assert(rows(spark.sql(probeSql)) === rows(st.probe(spark, scaD)),
+        s"$f: post-compaction SQL probe must equal the Scala path")
     }
+    val e = intercept[IllegalArgumentException](spark.sql(
+      s"SELECT * FROM append_store('nope', '$sqlD', 'ing_batch')").collect())
+    assert(e.getMessage.contains("fp|band|anchor|graph|ivf"), e.getMessage)
   }
 
   // curate TVF (EAGER): the full six-stage composition from SQL text
