@@ -34,7 +34,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.AsofStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.RangeStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim"),

@@ -24,8 +24,7 @@ object GraftSession {
       // graft's SQL functions + custom operator strategies.
       .withExtensions(new GraftExtensions)
       // Shuffle partitions sized to parallelism, not the 200 default.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cores.toString))
+      .config("spark.sql.shuffle.partitions", cores.toString)
       // AQE: runtime coalescing, skew-join splitting, plan re-opt.
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -71,10 +71,9 @@ object Tables {
       math.min(n, Int.MaxValue.toLong).toInt
     } catch { case _: Throwable => Int.MaxValue }
 
-  /** EXPLICIT SCAN FAN-OUT for scans whose map-side work is heavy
-    * (opt-out: spark.graft.scan.fanout=false). A parquet scan
-    * parallelizes at row-group granularity; a table that arrives as a
-    * handful of small files (every local test SF: one file, one row
+  /** EXPLICIT SCAN FAN-OUT for scans whose map-side work is heavy.
+    * A parquet scan parallelizes at row-group granularity; a table
+    * that arrives as a handful of small files (every local test SF: one file, one row
     * group per table) runs its ENTIRE map side as a single task while
     * the other cores idle. The optimization guide's input-skew rule
     * ("one huge unsplittable file … repartition immediately after the
@@ -98,27 +97,27 @@ object Tables {
     * SURVEY §6), re-proven by the oracle gate. */
   def fanOut(df: DataFrame, keys: String*): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.conf.get("spark.graft.scan.fanout", "true").toBoolean) df
-    else {
-      val files = df.inputFiles
-      if (files.isEmpty) return df // not a file scan — nothing to assess
-      val cores = spark.sparkContext.defaultParallelism
-      val sorted = files.sorted
-      // stat/footer probes are per-file metadata reads: fine for the
-      // few-file regime this decision targets; a many-file table is
-      // already parallel at file granularity (≥1 row group each)
-      if (sorted.length >= math.max(cores, 512)) return df
-      val stats = sorted.map(statOf(spark, _))
-      val key = cores + ":" +
-        spark.conf.get("spark.sql.files.maxPartitionBytes") + ":" +
-        sorted.mkString(",") + ":" +
-        stats.map { case (l, m) => s"$l.$m" }.mkString(",")
-      val effective = scanParts.computeIfAbsent(key, _ =>
-        math.min(df.rdd.getNumPartitions, rowGroupsOf(spark, sorted)))
-      if (effective >= cores) df
-      else df.repartition(cores, keys.map(df.col): _*)
-    }
+    val files = df.inputFiles
+    if (files.isEmpty) return df // not a file scan — nothing to assess
+    val cores = spark.sparkContext.defaultParallelism
+    val sorted = files.sorted
+    // stat/footer probes are per-file metadata reads: fine for the
+    // few-file regime this decision targets; a many-file table is
+    // already parallel at file granularity (≥1 row group each)
+    if (sorted.length >= math.max(cores, 512)) return df
+    val stats = sorted.map(statOf(spark, _))
+    val key = cores + ":" +
+      spark.conf.get("spark.sql.files.maxPartitionBytes") + ":" +
+      sorted.mkString(",") + ":" +
+      stats.map { case (l, m) => s"$l.$m" }.mkString(",")
+    val effective = scanParts.computeIfAbsent(key, _ =>
+      math.min(df.rdd.getNumPartitions, rowGroupsOf(spark, sorted)))
+    if (effective >= cores) df
+    else df.repartition(cores, keys.map(df.col): _*)
   }
+
+  /** Compressed input bytes per clustered-checkpoint partition. */
+  val ClusterBytesPerPart: Long = 128L << 10
 
   /** Scale-adaptive partition count for EXPLICIT clustered layouts
     * (the `Cp.localClustered*` call sites). REPARTITION_BY_NUM is
@@ -129,8 +128,8 @@ object Tables {
     * r17: the pair/iterative family runs 1.3–2.2× slower on local[32]
     * than local[8] at sf0.1 purely from fixed 32-partition clustered
     * checkpoints). Derive the count from the frame's LEAF input bytes
-    * instead — ~1 partition per MB of compressed input
-    * (spark.graft.cluster.bytesPerPart), clamped to
+    * instead — one partition per [[ClusterBytesPerPart]] of compressed
+    * input, clamped to
     * [1, spark.sql.shuffle.partitions] — so at production scale
     * (≥ tens of MB per table) the clamp lands on the session
     * parallelism and plans are IDENTICAL to the old constant, while
@@ -142,10 +141,9 @@ object Tables {
     val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
     val files = df.inputFiles
     if (files.isEmpty || files.length >= 512) return cap
-    val perPart = s.conf.get("spark.graft.cluster.bytesPerPart",
-      (128L << 10).toString).toLong
     val bytes = files.iterator.map(statOf(s, _)._1).sum
-    math.max(1, math.min(cap.toLong, (bytes + perPart - 1) / perPart)).toInt
+    math.max(1, math.min(cap.toLong,
+      (bytes + ClusterBytesPerPart - 1) / ClusterBytesPerPart)).toInt
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

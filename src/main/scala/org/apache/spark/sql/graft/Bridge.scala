@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -9,7 +10,8 @@ import org.apache.spark.sql.classic
   * Expression-backed Column constructor and plan accessors behind
   * `private[sql]`; living under `org.apache.spark.sql` is the standard
   * way extension libraries plug custom Catalyst expressions and
-  * logical plans into the public API.
+  * logical plans into the public API. The bench's listener reads the
+  * `private[spark]` listener bus and job-group key through here too.
   */
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -31,6 +33,13 @@ object Bridge {
     * with empty output). */
   def analyzedPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** Blocks until every posted listener event is delivered. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The job group a job was submitted under, from its properties. */
+  def jobGroup(props: java.util.Properties): Option[String] =
+    Option(props).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_GROUP_ID)))
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

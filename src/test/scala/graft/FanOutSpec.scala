@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * - fanOut must insert its exchange for a planted 1-file scan (the
   *   single-split case it exists for), must NO-OP for a table already
-  *   split at least `defaultParallelism` ways, must NO-OP when
-  *   spark.graft.scan.fanout=false, and must NO-OP on frames with no
-  *   file lineage.
+  *   split at least `defaultParallelism` ways, and must NO-OP on
+  *   frames with no file lineage.
   * - The split probe must count ROW GROUPS, not byte-range splits: a
   *   large single-row-group file slices into many mostly-empty splits
   *   and is exactly the case the fan-out targets.
@@ -54,14 +53,10 @@ class FanOutSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", old)
   }
 
-  test("fanOut honors the opt-out conf and skips non-scan frames") {
-    val one = s"$tmp/optout.parquet"
+  test("fanOut skips non-scan frames") {
+    val one = s"$tmp/nolineage.parquet"
     spark.range(0, 1000).coalesce(1).write.mode("overwrite").parquet(one)
     val scan = spark.read.parquet(one)
-    spark.conf.set("spark.graft.scan.fanout", "false")
-    try assert(!hasFanOutExchange(Tables.fanOut(scan, "id")),
-      "conf=false must disable the fan-out")
-    finally spark.conf.unset("spark.graft.scan.fanout")
     // no file lineage: a checkpointed frame must pass through untouched
     val cp = graft.functions.Cp.local(scan).toDF()
     assert(Tables.fanOut(cp, "id") eq cp,
@@ -99,7 +94,7 @@ class FanOutSpec extends AnyFunSuite {
         md5(concat_ws("", $"id", $"id" * 3)).as("pad"))
       .coalesce(2).write.mode("overwrite").parquet(big)
     assert(Tables.clusterParts(spark.read.parquet(big)) === cap,
-      "a table >> bytesPerPart*cap must clamp to shuffle.partitions")
+      "a table >> ClusterBytesPerPart*cap must clamp to shuffle.partitions")
     // no file lineage falls back to the cap (the safe upper bound)
     val cp = graft.functions.Cp.local(spark.read.parquet(tiny))
     assert(Tables.clusterParts(cp.toDF()) === cap)

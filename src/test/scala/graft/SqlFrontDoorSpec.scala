@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * through the library API must be reachable from pure SQL TEXT on a
   * GraftExtensions session — scalar expressions via injectFunction,
   * the custom OPERATORS via injectTableFunction (asof_join /
-  * range_join / topk_per_group TVFs) or the TopKRewrite rule. Each
+  * range_join / topk_per_group TVFs). Each
   * test drives spark.sql(...) only, and asserts bit-equality against
   * the library path (which the DuckDB oracle gates) or a known-exact
   * expectation, plus the custom exec in the executed plan where one
@@ -128,21 +128,6 @@ class SqlFrontDoorSpec extends AnyFunSuite {
     // projection of the k extreme keys per group
     assert(rows(tvf.select($"l_returnflag", $"l_orderkey")) ===
       rows(window.select($"l_returnflag", $"l_orderkey")))
-  }
-
-  // 5. implicit top-k: plain window SQL rewritten onto the custom exec
-  test("sql: TopKRewrite turns a row_number filter into TopKPerGroup") {
-    views
-    spark.conf.set(graft.plans.TopKRewrite.ConfKey, "true")
-    try {
-      val df = spark.sql(
-        """SELECT l_returnflag, l_orderkey, l_linenumber FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY l_returnflag
-          |    ORDER BY l_orderkey DESC, l_linenumber ASC) AS rn
-          |  FROM sql_lineitem) WHERE rn <= 3""".stripMargin)
-      assert(executedContains(df, "TopKPerGroup"),
-        "rewrite rule must plan the custom exec from plain SQL")
-    } finally spark.conf.set(graft.plans.TopKRewrite.ConfKey, "false")
   }
 
   // 6. brute-force cosine ANN from SQL

@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Multi-cycle standing-store soak MECHANICS at gate SF (the sf10
-  * timing table lives in BASELINE.md — graft.StoreSoak is the
-  * harness): across 3 probe → append → (compact) cycles the fp store
+/** Multi-cycle standing-store soak MECHANICS at gate SF (the timing
+  * harness is graft.IngestBench: per-cycle probe seconds, store rows
+  * and post-compaction files per bucket for every family): across 3 probe → append → (compact) cycles the fp store
   * must grow by a full all-novel batch per cycle, the CONSTANT probed
   * batch's census must never change (novel appends alias nothing),
   * compaction mid-run must preserve both, and the final compaction

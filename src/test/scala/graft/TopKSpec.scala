@@ -38,23 +38,6 @@ class TopKSpec extends AnyFunSuite {
       === Set(("a", 1), ("a", 2), ("b", 9)))
   }
 
-  test("optimizer rewrite accelerates filter-over-row_number when enabled") {
-    import spark.implicits._
-    def plan(): (Set[(String, Long)], String) = {
-      val df = graft.operators.Relational.qTopNPerGroup(spark, sf)
-      val rows = df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      (rows, df.queryExecution.optimizedPlan.toString)
-    }
-    val (before, planOff) = plan()
-    assert(!planOff.contains("TopKPerGroup"))
-    spark.conf.set(graft.plans.TopKRewrite.ConfKey, "true")
-    try {
-      val (after, planOn) = plan()
-      assert(planOn.contains("TopKPerGroup"), planOn)
-      assert(after === before)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.ConfKey)
-  }
-
   test("empty group key computes global top-k") {
     import spark.implicits._
     val top = TopK.perGroup(
