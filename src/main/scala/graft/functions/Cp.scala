@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** House localCheckpoint: eager + MEMORY_AND_DISK_SER.
@@ -113,31 +113,55 @@ object Cp {
 
   /** One-shot checkpoint hygiene for SIDE-EFFECTING verbs (the
     * append/ensure store maintenance family): run `body`, then drop
-    * every localCheckpoint block it created. The append verbs
-    * checkpoint intermediate frames (batch reps, novelty hits, capped
-    * edges) that are fully consumed by their eager writes — but the
-    * blocks themselves survive the call (MEMORY_AND_DISK_SER, reaped
-    * only on a driver GC), so a multi-cycle ingest/soak driver
-    * accumulates a generation per cycle until the heap forces the
-    * collection — the same checkpoint-retention OOM class
-    * [[dropGeneration]] exists for, one call-shape out. ONLY safe when
-    * `body`'s RESULT does not reference the checkpoints (Unit-returning
-    * appends, ensure* returning a table name); a verb returning a lazy
-    * DataFrame over its checkpoint must keep the generation alive. */
-  def scoped[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    try body
-    finally dropGeneration(s, s.sparkContext.getPersistentRDDs.keySet -- before)
+    * every localCheckpoint block it created — also when it throws. The
+    * append verbs checkpoint intermediate frames (batch reps, novelty
+    * hits, capped edges) that are fully consumed by their eager writes
+    * — but the blocks themselves survive the call
+    * (MEMORY_AND_DISK_SER, reaped only on a driver GC), so a
+    * multi-cycle ingest/soak driver accumulates a generation per cycle
+    * until the heap forces the collection — the same
+    * checkpoint-retention OOM class [[Rounds]] exists for, one
+    * call-shape out. ONLY safe when `body`'s RESULT does not reference
+    * the checkpoints (Unit-returning appends, ensure* returning a table
+    * name); a verb returning a lazy DataFrame over its checkpoint must
+    * keep the generation alive. */
+  def scoped[T](s: SparkSession)(body: => T): T =
+    created(s)(body)(dropGeneration(s, _))
+
+  /** ITERATIVE-ROUND checkpoint generations. Each `round { ... }` runs
+    * its body, keeps the localCheckpoints the body created live, and
+    * drops the previous round's once the body has returned — eager
+    * checkpoints have materialized by then and truncated the lineage
+    * to the dead generation, so at most two generations are ever
+    * live. Without this an N-round loop pins N generations of
+    * checkpointed state until the ContextCleaner GCs them — which at
+    * 100× SF is after the OOM, not before (observed: q_kcore executor
+    * OOM at sf10 on an 8 g heap). A round body must therefore hold
+    * every read of the previous generation (convergence checks
+    * included); a checkpoint that must outlive its round is made
+    * outside any round body, where no generation owns it. */
+  final class Rounds private[Cp] (s: SparkSession) {
+    private var live = Set.empty[Int]
+    def apply[T](body: => T): T =
+      created(s)(body) { ids => dropGeneration(s, live); live = ids }
   }
 
-  /** Iterative-round checkpoint hygiene: drop a DEAD generation's
-    * localCheckpoint blocks by RDD id. Eager localCheckpoints truncate
-    * lineage, so dropped blocks are unrecoverable — callers must only
-    * pass ids no live plan references. Without this an N-round loop
-    * pins N generations of checkpointed state until the ContextCleaner
-    * GCs them — which at 100× SF is after the OOM, not before. */
-  def dropGeneration(s: org.apache.spark.sql.SparkSession,
-                     ids: scala.collection.Set[Int]): Unit =
+  def rounds(s: SparkSession): Rounds = new Rounds(s)
+
+  /** Run `body`, then hand `after` the persistent RDD ids it created
+    * — in this engine, its [[local]] checkpoint blocks — also when it
+    * throws. */
+  private[graft] def created[T](s: SparkSession)(body: => T)(
+      after: Set[Int] => Unit): T = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally after((s.sparkContext.getPersistentRDDs.keySet -- before).toSet)
+  }
+
+  /** Drop a DEAD generation's localCheckpoint blocks by RDD id. Eager
+    * localCheckpoints truncate lineage, so dropped blocks are
+    * unrecoverable — callers pass only ids no live plan references. */
+  private[graft] def dropGeneration(s: SparkSession, ids: Set[Int]): Unit =
     s.sparkContext.getPersistentRDDs
       .filter { case (id, _) => ids(id) }
       .values.foreach(_.unpersist(blocking = false))

@@ -589,24 +589,23 @@ object Dedup {
     * measured 1.92× over 4 consumers at sf0.1);
     * (2) consumers must MATERIALIZE within `body` — on exit the
     * build's checkpoint blocks are dropped (generation hygiene, the
-    * [[Cp.dropGeneration]] rule); (3) NOT used by Bench: the
+    * [[graft.functions.Cp.Rounds]] rule); (3) NOT used by Bench: the
     * per-query isolation contract there prices each query standalone.
     * Not re-entrant per (session, dir). */
   def withSharedPairs[T](s: SparkSession, d: String)(body: => T): T = {
     val key = (s, d)
-    val sc = s.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+    var gen = Set.empty[Int]
     // cappedSizes on: the shared table serves EVERY consumer incl.
     // containment, and the szr joins are a one-time build cost here
-    val pairs = jaccardPairsOf(Tables.documents(s, d), cappedSizes = true)
-      .transform(graft.functions.Cp.local)
-    val gen = sc.getPersistentRDDs.keySet -- before
+    val pairs = graft.functions.Cp.created(s)(
+      jaccardPairsOf(Tables.documents(s, d), cappedSizes = true)
+        .transform(graft.functions.Cp.local))(gen = _)
     require(sharedPairs.putIfAbsent(key, pairs) == null,
       s"withSharedPairs already active for $d in this session")
     try body
     finally {
       sharedPairs.remove(key)
-      dropGeneration(s, gen)
+      graft.functions.Cp.dropGeneration(s, gen)
     }
   }
 
@@ -614,6 +613,17 @@ object Dedup {
                                   cappedSizes: Boolean = false): DataFrame =
     Option(sharedPairs.get((s, d)))
       .getOrElse(jaccardPairsOf(Tables.documents(s, d), cappedSizes))
+
+  /** The near-dup graph: (doc_a, doc_b) pairs with jaccard > 1/2 under
+    * the df cap, in the engine-exact integer form `3·inter > na+nb`. */
+  private[graft] def nearDupEdges(s: SparkSession, d: String): DataFrame =
+    jaccardPairs(s, d).filter(lit(3) * col("inter") > col("na") + col("nb"))
+      .select(col("doc_a"), col("doc_b"))
+
+  /** Both directions of (doc_a, doc_b) edges, named (`a`, `b`). */
+  private def undirected(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col("doc_a").as(a), col("doc_b").as(b))
+      .union(e.select(col("doc_b").as(a), col("doc_a").as(b)))
 
   /** CROSS-SOURCE DUPLICATION CENSUS — the provenance-leakage question
     * a corpus card must answer: which SOURCES copy from each other?
@@ -844,13 +854,10 @@ object Dedup {
     var edgeCount = edges.count()
     var converged = false
     var i = 0
-    // round hygiene: the original `edges` checkpoint is PROTECTED (the
-    // final `nodes` join reads it); per-round large/small generations
-    // are dropped one round after they die (dropGeneration scaladoc)
-    val ccSc = edges.sparkSession.sparkContext
-    var prevGen: scala.collection.Set[Int] = Set.empty[Int]
-    while (!converged && i < maxIter && edgeCount > localFinishMaxEdges) {
-      val beforeRound = ccSc.getPersistentRDDs.keySet
+    // the original `edges` checkpoint is PROTECTED (the final `nodes`
+    // join reads it): it is made outside every round
+    val round = graft.functions.Cp.rounds(pairs.sparkSession)
+    while (!converged && i < maxIter && edgeCount > localFinishMaxEdges) round {
       // large-star: group by each endpoint; attach every LARGER
       // neighbor to min(neighbors ∪ self)
       val dir = edges.union(edges.select($"v".as("u"), $"u".as("v")))
@@ -879,8 +886,6 @@ object Dedup {
         small.join(edges, Seq("u", "v"), "left_anti").isEmpty
       edgeCount = smallCount
       edges = small
-      dropGeneration(edges.sparkSession, prevGen)
-      prevGen = ccSc.getPersistentRDDs.keySet -- beforeRound
       i += 1
     }
     if (!converged && edgeCount <= localFinishMaxEdges) {
@@ -1129,9 +1134,7 @@ object Dedup {
     // reused by CC + both censuses; clustered+sorted by doc_a so each
     // census's first merge join reads it exchange- and sort-free
     val edges = graft.functions.Cp.localClusteredSorted(
-      jaccardPairs(s, d)
-        .filter(lit(3) * $"inter" > $"na" + $"nb")
-        .select($"doc_a", $"doc_b"),
+      nearDupEdges(s, d),
       nPart, Seq("doc_a"))
     val lab = connectedComponents(edges).withColumnRenamed("id", "doc_id")
     // reused by both censuses (x2 joins each, keyed doc_a/doc_b via
@@ -1189,18 +1192,13 @@ object Dedup {
   def qPagerank(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d).select($"doc_id")
-    val und = jaccardPairs(s, d)
-      .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
     // materialized CLUSTERED+SORTED by src: all 7 consumers key on it
     // (the degree agg ×4 plan sites and the per-round edges⋈deg join
     // ×3) — with a plain checkpoint each re-shuffled the edge volume
     // every round (7 UnknownPartitioning scans in the round-13 plans)
     val nPart = graft.Tables.clusterParts(Tables.documents(s, d))
     val edges = graft.functions.Cp.localClusteredSorted(
-      und.select($"doc_a".as("src"), $"doc_b".as("dst"))
-        .union(und.select($"doc_b".as("src"), $"doc_a".as("dst"))),
-      nPart, Seq("src"))
+      undirected(nearDupEdges(s, d), "src", "dst"), nPart, Seq("src"))
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
     var ranks = docs.select($"doc_id", lit(1000000000L).as("rank_e9"))
     for (_ <- 0 until PrIters) {
@@ -1224,17 +1222,6 @@ object Dedup {
   private val KcoreK = 2     // core order
   private val KcorePeels = 8 // simultaneous peel rounds, oracle-mirrored
 
-  /** Iterative-round checkpoint hygiene: drop a DEAD generation's
-    * localCheckpoint blocks by RDD id. Eager localCheckpoints truncate
-    * lineage, so dropped blocks are unrecoverable — callers must only
-    * pass ids no live plan references. Without this, an N-round loop
-    * pins N generations of checkpointed edges and an 8 g heap dies at
-    * sf10 (observed: q_kcore executor OOM); with it, at most two
-    * generations are ever live. The ContextCleaner would eventually GC
-    * them, but "eventually" is after the OOM. */
-  private def dropGeneration(s: SparkSession, ids: scala.collection.Set[Int]): Unit =
-    graft.functions.Cp.dropGeneration(s, ids)
-
   /** K-CORE EXTRACTION over the near-dup graph — the density filter
     * graph curation uses above connected components (a CC can be a
     * long fragile chain; the 2-core keeps only docs embedded in
@@ -1251,28 +1238,21 @@ object Dedup {
     * checksum, so the oracle match proves every surviving vertex. */
   def qKcore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val und = jaccardPairs(s, d)
-      .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
-    val sc = s.sparkContext
-    val before0 = sc.getPersistentRDDs.keySet
-    var e = und.select($"doc_a".as("u"), $"doc_b".as("v"))
-      .union(und.select($"doc_b".as("u"), $"doc_a".as("v")))
-      .transform(graft.functions.Cp.local)
+    val round = graft.functions.Cp.rounds(s)
     // generation 0 owns the upstream pair-pipeline checkpoints too —
     // all dead once generation 1 materializes
-    var prevGen: scala.collection.Set[Int] =
-      sc.getPersistentRDDs.keySet -- before0
+    var e = round {
+      undirected(nearDupEdges(s, d), "u", "v")
+        .transform(graft.functions.Cp.local)
+    }
     for (_ <- 0 until KcorePeels) {
       val keep = e.groupBy($"u").agg(count(lit(1)).as("dg"))
         .filter($"dg" >= KcoreK).select($"u")
-      val beforeR = sc.getPersistentRDDs.keySet
-      e = e.join(keep, Seq("u"), "left_semi")
-        .join(keep.select($"u".as("v")), Seq("v"), "left_semi")
-        .transform(graft.functions.Cp.local) // eager: the previous generation is now dead
-      val newGen = sc.getPersistentRDDs.keySet -- beforeR
-      dropGeneration(s, prevGen)
-      prevGen = newGen
+      e = round {
+        e.join(keep, Seq("u"), "left_semi")
+          .join(keep.select($"u".as("v")), Seq("v"), "left_semi")
+          .transform(graft.functions.Cp.local)
+      }
     }
     e.select($"u".as("doc_id")).distinct()
       .join(Tables.documents(s, d).select($"doc_id", $"source"),
@@ -1302,10 +1282,6 @@ object Dedup {
     * rounds. */
   def qLabelProp(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val und = jaccardPairs(s, d)
-      .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
-    val sc = s.sparkContext
     // the edge table is LIVE for every round — it must not join the
     // per-round label generations that get dropped (unlike qKcore,
     // where edges are replaced each round). A clustered+sorted-on-u
@@ -1313,28 +1289,27 @@ object Dedup {
     // ways at sf10 isolated (the per-round label side stays under the
     // broadcast threshold, so the edge side never re-shuffles anyway);
     // rejected per measure-before-adopt (BASELINE.md wave 4).
-    val e = und.select($"doc_a".as("u"), $"doc_b".as("v"))
-      .union(und.select($"doc_b".as("u"), $"doc_a".as("v")))
+    val e = undirected(nearDupEdges(s, d), "u", "v")
       .transform(graft.functions.Cp.local)
-    var prevGen: scala.collection.Set[Int] = Set.empty
-    var lab = e.select($"u".as("node")).distinct()
+    val round = graft.functions.Cp.rounds(s)
+    val seed = e.select($"u".as("node")).distinct()
       .select($"node", $"node".as("label"))
-    var changedLast = 0L
-    for (_ <- 1 to LpRounds) {
+    // each generation is (node, label, chg); only the last one's
+    // changed-node count is reported, so it is the only one summed
+    val last = (1 to LpRounds).foldLeft(seed) { (gen, _) =>
+      val lab = gen.select($"node", $"label")
       val nbr = e.join(lab.select($"node".as("u"), $"label"), Seq("u"))
         .groupBy($"v".as("node")).agg(min($"label").as("nl"))
-      val beforeR = sc.getPersistentRDDs.keySet
-      val next = lab.join(nbr, Seq("node"), "left")
-        .select($"node",
-          least($"label", coalesce($"nl", $"label")).as("label"),
-          ($"nl".isNotNull && $"nl" < $"label").cast("long").as("chg"))
-        .transform(graft.functions.Cp.local)
-      changedLast = next.agg(sum($"chg")).as[Long].head()
-      lab = next.select($"node", $"label")
-      val newGen = sc.getPersistentRDDs.keySet -- beforeR
-      dropGeneration(s, prevGen)
-      prevGen = newGen
+      round {
+        lab.join(nbr, Seq("node"), "left")
+          .select($"node",
+            least($"label", coalesce($"nl", $"label")).as("label"),
+            ($"nl".isNotNull && $"nl" < $"label").cast("long").as("chg"))
+          .transform(graft.functions.Cp.local)
+      }
     }
+    val changedLast = last.agg(sum($"chg")).as[Long].head()
+    val lab = last.select($"node", $"label")
     val comms = lab.groupBy($"label")
       .agg(count(lit(1)).as("csize"),
         bit_xor($"node".bitwiseXOR($"label" * lit(1000003L))).as("ax"))
@@ -1356,9 +1331,7 @@ object Dedup {
     * over edges + one histogram agg over the (≤ max-degree) spine. */
   def qDegreeDist(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val und = jaccardPairs(s, d)
-      .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
+    val und = nearDupEdges(s, d)
     val deg = und.select($"doc_a".as("v")).union(und.select($"doc_b".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
     deg.groupBy($"deg")
@@ -1386,9 +1359,7 @@ object Dedup {
     // three times (forward, reversed, roots anti-probe) and each
     // recursion round references `e` again — without the checkpoint
     // every reference re-runs the full shingle pair join
-    jaccardPairs(s, d).filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
-      .transform(graft.functions.Cp.local)
+    nearDupEdges(s, d).transform(graft.functions.Cp.local)
       .createOrReplaceTempView("graft_dup_edges")
     s.sql(
       """WITH RECURSIVE
@@ -1422,8 +1393,7 @@ object Dedup {
   def qTriangles(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val nPart = graft.Tables.clusterParts(Tables.documents(s, d))
-    val e = jaccardPairs(s, d).filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b").transform(graft.functions.Cp.local)
+    val e = nearDupEdges(s, d).transform(graft.functions.Cp.local)
     val deg = e.select(explode(array($"doc_a", $"doc_b")).as("v"))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
     // clustered+sorted on src: the wedge self-join below reads BOTH
@@ -1467,9 +1437,7 @@ object Dedup {
   def qDedupKeep(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val edges = jaccardPairs(s, d)
-      .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
+    val edges = nearDupEdges(s, d)
     val labels = connectedComponents(edges)
     docs.join(labels, docs("doc_id") === labels("id"), "left")
       .withColumn("keep", $"label".isNull || $"label" === $"doc_id")
@@ -1650,13 +1618,8 @@ object Dedup {
     * checksum. Oracle: the same recursive SQL in DuckDB. */
   def qReachability(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val und = jaccardPairs(s, d)
-      .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
-      .transform(graft.functions.Cp.local)
-    und.select($"doc_a".as("u"), $"doc_b".as("v"))
-      .union(und.select($"doc_b".as("u"), $"doc_a".as("v")))
-      .createOrReplaceTempView("graft_nd_edges")
+    undirected(nearDupEdges(s, d).transform(graft.functions.Cp.local),
+      "u", "v").createOrReplaceTempView("graft_nd_edges")
     s.sql(
       s"""WITH RECURSIVE reach(node, depth) AS (
          |  SELECT DISTINCT u AS node, 0 AS depth FROM graft_nd_edges
@@ -1691,9 +1654,7 @@ object Dedup {
     // checkpoint scans, each re-shuffling pair volume)
     val nPart = graft.Tables.clusterParts(Tables.documents(s, d))
     val truth = graft.functions.Cp.localClusteredSorted(
-      jaccardPairs(s, d)
-        .filter(lit(3) * $"inter" > $"na" + $"nb")
-        .select($"doc_a", $"doc_b"),
+      nearDupEdges(s, d),
       nPart, Seq("doc_a", "doc_b"))
     val cand = graft.functions.Cp.localClusteredSorted(
       minhashCandidates(Tables.documents(s, d))

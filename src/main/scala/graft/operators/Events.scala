@@ -1052,7 +1052,7 @@ object Events {
     * distribution-compare verb between q_ks_drift's single max-gap
     * statistic and a full histogram diff: every 5th percentile of both
     * sides, exact nearest-rank from the (type, cents) value histogram
-    * via the division-free cum·100 ≥ p·tot compare (the medianBy
+    * via the division-free cum·100 ≥ p·tot compare (the medianOfHist
     * idiom), aligned into (p, q_view, q_purchase, shift) rows. All
     * integer cents — engine-exact by construction. Scale shape: one
     * histogram shuffle, windows over the VALUE domain, a ×19
@@ -1065,16 +1065,7 @@ object Events {
       .select($"event_type",
         ($"value".cast("decimal(18,2)") * 100).cast("long").as("cents"))
       .groupBy($"event_type", $"cents").agg(count(lit(1)).as("cnt"))
-    val cumW = Window.partitionBy($"event_type").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"event_type").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val q = hist
-      .withColumn("cum", sum($"cnt").over(cumW))
-      .withColumn("tot", sum($"cnt").over(totW))
+    val q = Relational.cumTot(hist, "event_type", "cents", "cnt")
       .select($"event_type", $"cents", $"cum", $"tot",
         explode(expr("sequence(5L, 95L, 5L)")).as("p"))
       .groupBy($"event_type", $"p")
@@ -1487,20 +1478,9 @@ object Events {
                 |END""".stripMargin).as("slope_e9"))
     val h = pairs.groupBy($"event_type", $"slope_e9")
       .agg(count(lit(1)).as("t"))
-    val cumW = Window.partitionBy($"event_type").orderBy($"slope_e9".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"event_type").orderBy($"slope_e9".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    h.withColumn("cum", sum($"t").over(cumW))
-      .withColumn("tot", sum($"t").over(totW))
-      .groupBy($"event_type")
-      .agg(min($"tot").as("n_pairs"),
-        ((min(when($"cum" >= expr("(tot + 1) div 2"), $"slope_e9")) +
-          min(when($"cum" >= expr("tot div 2 + 1"), $"slope_e9"))) / 2.0)
-          .as("slope_e9_med"))
+    Relational.medianOfHist(h, "event_type", "slope_e9", "t",
+        min($"tot").as("n_pairs"))
+      .select($"event_type", $"n_pairs", $"med".as("slope_e9_med"))
       .orderBy($"event_type".asc)
   }
 

@@ -685,7 +685,7 @@ object Relational {
     import s.implicits._
     // Ranks NEVER touch row grain: tie-averaged 2·avgrank =
     // 2·cumBelow + t + 1 comes from the per-segment VALUE histogram
-    // (the medianBy idiom), so each rank window sorts the distinct-
+    // (the medianOfHist idiom), so each rank window sorts the distinct-
     // value spine, not the table — at 100× SF lineitem has ~100×
     // fewer distinct prices than rows, and segment-partition skew
     // (3 segments = 3-way parallelism on a row-grain sort) vanishes.
@@ -774,7 +774,7 @@ object Relational {
     * (n−j+1)-th order statistics bracket the true median with ≥95%
     * coverage for j = ⌊(n − z√n)/2⌋, z = 1.959964): exact at any
     * scale because the order statistics come from the value-histogram
-    * cum ≥ rank compare (the medianBy idiom — never a per-group
+    * cum ≥ rank compare (the medianOfHist idiom — never a per-group
     * sort of rows), and the rank indices are the SAME IEEE expression
     * in both engines (sqrt/mult/floor are correctly-rounded, so the
     * floor'd integer agrees bit-for-bit). One row-grain agg + one
@@ -785,15 +785,7 @@ object Relational {
         "l_orderkey", "l_linenumber").select($"l_returnflag",
       ($"l_extendedprice".cast("decimal(18,2)") * 100).cast("long").as("cents"))
       .groupBy($"l_returnflag", $"cents").agg(count(lit(1)).as("t"))
-    val cumW = Window.partitionBy($"l_returnflag").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"l_returnflag").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    h.withColumn("cum", sum($"t").over(cumW))
-      .withColumn("n", sum($"t").over(totW))
+    cumTot(h, "l_returnflag", "cents", "t", tot = "n")
       .withColumn("lo_rank", greatest(lit(1L),
         floor(($"n" - lit(1.959964) * sqrt($"n".cast("double"))) / 2)
           .cast("long")))
@@ -1321,16 +1313,7 @@ object Relational {
         ($"c_acctbal".cast("decimal(18,2)") * 100).cast("long").as("bal_cents"))
       .join(wgt, $"c_custkey" === $"o_custkey")
       .groupBy($"c_mktsegment", $"bal_cents").agg(sum($"w").as("w"))
-    val cumW = Window.partitionBy($"c_mktsegment").orderBy($"bal_cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"c_mktsegment").orderBy($"bal_cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    hist
-      .withColumn("cum", sum($"w").over(cumW))
-      .withColumn("tot", sum($"w").over(totW))
+    cumTot(hist, "c_mktsegment", "bal_cents", "w")
       .filter($"cum" * 2 >= $"tot")
       .groupBy($"c_mktsegment")
       .agg(min($"bal_cents").as("median_cents"), max($"tot").as("total_w"))
@@ -1355,42 +1338,46 @@ object Relational {
         $"n".as("n_mode"))
   }
 
-  /** Exact per-group median in distributed histogram form: one shuffle
-    * agg to the (group, value) grain, then cumulative-count windows
-    * over that spine and the interpolated pick (v⌈n/2⌉ + v⌊n/2⌋₊₁)/2 —
-    * identical to `quantile_cont(0.5)` but with per-task state bounded
-    * by the partial-agg hash map, never a per-group all-values buffer
-    * (Spark's `percentile` builds one; on a near-continuous 100 TB
-    * column that map is executor-memory-sized). Same shape as
-    * [[qWeightedMedian]]. */
-  /** Median from a pre-built (key, value, count) histogram — windows
-    * run on the distinct-value spine only. */
-  private def medianOfHist(h: DataFrame, key: String, v: String,
-                           cnt: String): DataFrame = {
-    import h.sparkSession.implicits._
-    val cumW = Window.partitionBy(col(key)).orderBy(col(v).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partitioning AND ordering as cumW (the ordering is
-    // irrelevant to a full-frame sum) so Catalyst fuses both frames
-    // into ONE WindowExec — an unordered tot frame planned a second
-    // window pass over the whole spine (one extra stage per median)
-    val totW = Window.partitionBy(col(key)).orderBy(col(v).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    h.withColumn("cum", sum(col(cnt)).over(cumW))
-      .withColumn("tot", sum(col(cnt)).over(totW))
-      .groupBy(col(key))
-      .agg(((min(when($"cum" >= expr("(tot + 1) div 2"), col(v))) +
-        min(when($"cum" >= expr("tot div 2 + 1"), col(v)))) / 2.0).as("med"))
+  /** Running and total count over a (key, value, count) histogram
+    * spine: adds `cum` (the key's `cnt` summed over values up to this
+    * row's) and `tot` (the key's whole `cnt`) — what every exact
+    * rank/quantile pick here compares against, so windows run on the
+    * distinct-value spine, never on rows. Both frames share
+    * partitioning AND ordering (the ordering is irrelevant to a
+    * full-frame sum) so Catalyst fuses them into ONE WindowExec — an
+    * unordered tot frame planned a second window pass over the whole
+    * spine (one extra stage per quantile). */
+  private[graft] def cumTot(h: DataFrame, key: String, v: String,
+                            cnt: String, cum: String = "cum",
+                            tot: String = "tot"): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col(v).asc)
+    h.withColumn(cum, sum(col(cnt)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn(tot, sum(col(cnt)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
   }
 
-  private def medianBy(df: DataFrame, key: String, v: String): DataFrame =
-    medianOfHist(df.groupBy(col(key), col(v))
-      .agg(count(lit(1)).as("__mcnt")), key, v, "__mcnt")
+  /** Exact median `med` per key from a pre-built (key, value, count)
+    * histogram: the interpolated pick (v⌈n/2⌉ + v⌊n/2⌋₊₁)/2 over
+    * [[cumTot]] — identical to `quantile_cont(0.5)` but with per-task
+    * state bounded by the partial-agg hash map, never a per-group
+    * all-values buffer (Spark's `percentile` builds one; on a
+    * near-continuous 100 TB column that map is executor-memory-sized).
+    * `extra` aggregates run over the same spine. */
+  private[graft] def medianOfHist(h: DataFrame, key: String, v: String,
+                                  cnt: String, extra: Column*): DataFrame = {
+    import h.sparkSession.implicits._
+    cumTot(h, key, v, cnt)
+      .groupBy(col(key))
+      .agg(((min(when($"cum" >= expr("(tot + 1) div 2"), col(v))) +
+        min(when($"cum" >= expr("tot div 2 + 1"), col(v)))) / 2.0).as("med"),
+        extra: _*)
+  }
 
   /** ROBUST OUTLIER DETECTION via median absolute deviation — the
     * skew-immune anomaly gate (mean/stddev outlier rules break under
     * the very outliers they hunt; median/MAD don't). Medians via
-    * [[medianBy]]'s histogram form, so no per-group value buffer
+    * [[medianOfHist]]'s histogram form, so no per-group value buffer
     * anywhere. Medians of integer cents land on exact .0/.5 doubles,
     * deviations on .0/.5, 3×MAD on .25 multiples — every comparison is
     * between exactly-representable doubles, so the strict `>`
@@ -1631,7 +1618,7 @@ object Relational {
     * nearest-rank p25/p50/p75/p95 as the smallest value whose
     * cumulative count reaches ⌈p·N/100⌉, found with the division-free
     * cum·100 ≥ p·tot compare on exact BIGINT cents. The window runs
-    * over (group, value)-grain HISTOGRAM rows — the same medianBy
+    * over (group, value)-grain HISTOGRAM rows — the same medianOfHist
     * shape q_weighted_median/q_outlier_mad use, never a per-row value
     * buffer, so group size doesn't bound memory at 100 TB. */
   def qPercentilesExact(s: SparkSession, d: String): DataFrame = {
@@ -1640,15 +1627,7 @@ object Relational {
       .select($"o_orderpriority",
         ($"o_totalprice".cast("decimal(18,2)") * 100).cast("long").as("cents"))
       .groupBy($"o_orderpriority", $"cents").agg(count(lit(1)).as("cnt"))
-    val cumW = Window.partitionBy($"o_orderpriority").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"o_orderpriority").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    hist.withColumn("cum", sum($"cnt").over(cumW))
-      .withColumn("tot", sum($"cnt").over(totW))
+    cumTot(hist, "o_orderpriority", "cents", "cnt")
       .groupBy($"o_orderpriority")
       .agg(max($"tot").as("n"),
         min(when($"cum" * 100 >= $"tot" * 25, $"cents")).as("p25_cents"),
@@ -1674,15 +1653,7 @@ object Relational {
       .select($"o_orderstatus",
         ($"o_totalprice".cast("decimal(18,2)") * 100).cast("long").as("cents"))
       .groupBy($"o_orderstatus", $"cents").agg(count(lit(1)).as("cnt"))
-    val cumW = Window.partitionBy($"o_orderstatus").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"o_orderstatus").orderBy($"cents".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val bounds = hist.withColumn("cum", sum($"cnt").over(cumW))
-      .withColumn("tot", sum($"cnt").over(totW))
+    val bounds = cumTot(hist, "o_orderstatus", "cents", "cnt")
       .groupBy($"o_orderstatus")
       .agg(min(when($"cum" * 100 >= $"tot" * 5, $"cents")).as("p05"),
         min(when($"cum" * 100 >= $"tot" * 95, $"cents")).as("p95"))

@@ -118,7 +118,7 @@ object Sampling {
     * scorer (same formula as q_quality_model, so the oracle reproduces
     * it); the quartile cut is EXACT and never buffers values — a
     * (lang, score)-grain histogram, cumulative count F(score) via the
-    * medianBy-style histogram window, and phase = ceil(4·F/N) in pure
+    * medianOfHist-style histogram window, and phase = ceil(4·F/N) in pure
     * integer arithmetic. Ties (equal scores) land in one phase by
     * construction, on any partitioning. The per-row assignment is
     * proven by a bit_xor checksum of doc_id ⊕ phase·1000003 — an
@@ -138,16 +138,7 @@ object Sampling {
       .transform(graft.functions.Cp.local)
     val hist = scored.groupBy($"lang", $"score")
       .agg(count(lit(1)).as("cnt"))
-    val cumW = Window.partitionBy($"lang").orderBy($"score".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // same partition+order as cumW so both frames fuse into ONE
-    // WindowExec pass (the medianOfHist rule; ordering is irrelevant
-    // to a full-frame sum)
-    val totW = Window.partitionBy($"lang").orderBy($"score".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val phased = hist
-      .withColumn("f", sum($"cnt").over(cumW))
-      .withColumn("tot", sum($"cnt").over(totW))
+    val phased = Relational.cumTot(hist, "lang", "score", "cnt", cum = "f")
       .withColumn("phase", expr("(4 * f + tot - 1) DIV tot"))
       .select($"lang", $"score", $"phase")
     scored.join(phased, Seq("lang", "score"))

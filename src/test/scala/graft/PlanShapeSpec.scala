@@ -255,6 +255,19 @@ class PlanShapeSpec extends AnyFunSuite {
         "remove it from the whitelist")
   }
 
+  test("histogram cum/tot: both frames fuse into ONE WindowExec") {
+    import org.apache.spark.sql.functions._
+    val h = Tables.orders(spark, sf)
+      .groupBy(col("o_orderstatus"), col("o_totalprice"))
+      .agg(count(lit(1)).as("cnt"))
+    val plan = graft.operators.Relational
+      .cumTot(h, "o_orderstatus", "o_totalprice", "cnt").queryExecution.sparkPlan
+    val windows = plan.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.size == 1, plan.toString)
+  }
+
   test("the global-window detector catches a data-sized offender") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
