@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression, ExpressionInfo, Literal, SortOrder}
+import org.apache.spark.sql.functions.{col, concat_ws, size}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.MinHash.{MinHashSigs, ShingleHash60, SigAgree, SimHash32}
@@ -73,10 +74,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.functions.HilbertCurve.HilbertDecode(args(0))))
     // The engine's standard oracle-reproducible hash
     // (TextFunctions.md5Prefix60) as a SQL function, so pure-SQL
-    // pipelines (and the TVF expansions below) hash bit-identically
-    // to the library paths: CAST(conv(substring(md5(x),1,15),16,10)
-    // AS BIGINT). Built by parse-and-splice — the parsed template is
-    // the same function composition the Column API emits.
+    // pipelines hash bit-identically to the library paths:
+    // CAST(conv(substring(md5(x),1,15),16,10) AS BIGINT). Built by
+    // parse-and-splice — the parsed template is the same function
+    // composition the Column API emits.
     ext.injectFunction((
       FunctionIdentifier("md5_prefix60"),
       info("md5_prefix60"),
@@ -144,213 +145,74 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           k = intArg(args(4), "k"),
           child = rel(tbl))
       }))
-    // The dedup PAIR PIPELINE as one TVF call — the curation verb
-    // whose Scala form is Dedup.jaccardPairs: shingle → df-cap →
-    // self-join → (doc_a, doc_b, na, nb, inter). The builder expands
-    // to PARSED SQL text over the registered shingle_hash60 function
-    // (bit-identical hashing to the library path, proven by
-    // SqlFrontDoorSpec), so the analyzer resolves the view name and
-    // the optimizer sees ordinary operators. Unlike the library path
-    // there is no checkpoint materialization — a SQL caller reusing
-    // the pairs several times should CACHE the result; semantics are
-    // identical. Table arg must be a bare view/table identifier (it
-    // is spliced into SQL text — enforced, no expression injection).
-    ext.injectTableFunction((
-      FunctionIdentifier("dedup_pairs"),
-      info("dedup_pairs"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "dedup_pairs(table, shingleN, dfCap) — table is a string " +
-            "literal naming a view with (doc_id, text)")
-        val tbl = strArg(args(0), "table")
-        require(tbl.matches("[A-Za-z_][A-Za-z0-9_.]*"),
-          s"dedup_pairs table must be a plain identifier, got $tbl")
-        val n = intArg(args(1), "shingleN")
-        val cap = intArg(args(2), "dfCap")
-        // CTEs don't survive late introduction into an already-running
-        // analysis (CTESubstitution has passed), so the pipeline is
-        // inlined as derived tables; the optimizer dedups the shared
-        // posting subtree via exchange reuse.
-        val ds =
-          s"""SELECT doc_id, size(shs) AS n, explode(shs) AS s FROM
-             |  (SELECT doc_id, array_distinct(
-             |     shingle_hash60(split(text, ' '), $n)) AS shs
-             |   FROM $tbl)""".stripMargin
-        val dsr =
-          s"""SELECT ds.doc_id, ds.n, ds.s FROM ($ds) ds
-             |LEFT SEMI JOIN (SELECT s FROM ($ds) GROUP BY s
-             |  HAVING count(*) <= $cap) rare ON ds.s = rare.s"""
-            .stripMargin
-        // merge-pin the corpus-grown sides structurally (SQL hint
-        // comments never resolve in late-introduced plans — see
-        // parsePlanHinted): the posting self-join and the df-cap semi
-        // join must never AQE-broadcast at scale.
-        parsePlanHinted(
-          s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             |  a.n AS na, b.n AS nb, count(*) AS inter
-             |FROM ($dsr) a JOIN ($dsr) b
-             |  ON a.s = b.s AND a.doc_id < b.doc_id
-             |GROUP BY a.doc_id, b.doc_id, a.n, b.n""".stripMargin,
-          merge = Set("b", "rare"))
-      }))
-    // SPAN TRIM as a TVF — the most differentiated curation verb from
-    // pure SQL: every doc of the named view (doc_id, text) rewritten
-    // with its ≥12-token verbatim shared spans removed. Expands to the
-    // [[graft.operators.TextAnalysis.trimmedDocsOf]] pipeline over the
-    // registered md5_prefix60 (bit-identical hashing → identical
-    // anchors, spans, and rewritten text; SqlFrontDoorSpec proves
-    // byte-equality against the library path). Same df/occ caps and
-    // merge hints; unlike the library path there is NO checkpoint, so
-    // the anchor subtree appears several times in the plan — exchange
-    // reuse consolidates the scans, and a SQL caller chaining further
-    // stages should CACHE the result.
-    ext.injectTableFunction((
-      FunctionIdentifier("span_trim"),
-      info("span_trim"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "span_trim(table) — table is a string literal naming a view " +
-            "with (doc_id, text)")
-        val tbl = ident(strArg(args(0), "span_trim table"))
-        parsePlanHinted(spanTrimSql(tbl),
-          merge = Set("b", "d", "iv"))
-      }))
-    // SEMDEDUP as a TVF: the per-cell census of
-    // [[graft.operators.Similarity.qSemDedup]] over any (vec_id,
-    // embedding) view, with a caller-chosen cosine threshold. The
-    // nearest-centroid assignment is relational here — argmax over a
-    // broadcast √N-bounded centroid set via min(struct(-cos, cid)),
-    // bit-identical to the library's fused NearestCentroid expression
-    // because cosine_sim shares its exact accumulation order and the
-    // struct-min tie-break mirrors its first-max-wins scan.
-    ext.injectTableFunction((
-      FunctionIdentifier("semdedup"),
-      info("semdedup"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "semdedup(table, tau) — table names a view with (vec_id, " +
-            "embedding); tau is the cosine threshold as a string literal")
-        val tbl = ident(strArg(args(0), "semdedup table"))
-        val tau = strArg(args(1), "semdedup tau")
-        require(tau.matches("""[0-9]+(\.[0-9]+)?([eE]-?[0-9]+)?"""),
-          s"semdedup tau must be a plain decimal, got $tau")
-        parsePlanHinted(semdedupSql(tbl, tau),
-          merge = Set("b", "d"), bcast = Set("c"))
-      }))
-    // DSIR SELECTION as a TVF: the top-(n DIV budgetDiv) documents of
-    // the named (doc_id, lang, text) view by hashed-unigram importance
-    // toward targetLang — [[graft.operators.Sampling.dsirScored]] +
-    // [[graft.operators.Sampling.dsirSelectFrom]] from SQL text,
-    // including the bounded-histogram exact top-k (no data-sized
-    // global window). Integer-exact weights via md5_prefix60 + DIV.
-    // NO CHECKPOINT (same caveat as span_trim): the library path
-    // Cp.local-checkpoints dsirScored so the histogram and both
-    // selection branches read ONE materialization, but a TVF plan
-    // cannot checkpoint — the scored-docs subtree (full token explode
-    // + weight join) and the budget count(*) scalar are each inlined
-    // three times, and exchange reuse is not guaranteed after AQE
-    // replanning. SQL callers chaining this into further stages
-    // should CACHE the view (or the TVF result) first.
-    ext.injectTableFunction((
-      FunctionIdentifier("dsir_select"),
-      info("dsir_select"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "dsir_select(table, targetLang, budgetDiv) — table names a " +
-            "view with (doc_id, lang, text)")
-        val tbl = ident(strArg(args(0), "dsir_select table"))
-        val lang = strArg(args(1), "dsir_select targetLang")
+    // ---- CURATION VERBS over a view. Each TVF below resolves its
+    // view with SparkSession.active.table and returns the library
+    // frame's plan — never a SQL-text re-expression of the pipeline,
+    // so there is one implementation per verb and the library's merge
+    // hints arrive already resolved. These TVFs are EAGER: the
+    // library verbs checkpoint (posting tables, CC rounds, beam hops,
+    // scored docs) and count, so their Spark jobs run when the
+    // statement is ANALYZED (the sql(...) call), not when the result
+    // is fetched, and the result is pinned to the view's content at
+    // that moment. A SQL caller that changes the view re-issues the
+    // statement. dsir_select's budget is count(view) / budgetDiv;
+    // dup_clusters' tauPct is jaccard·100 (50 ⇔ 3·inter > na+nb).
+    viewTvf(ext, "dedup_pairs", 3, "dedup_pairs(table, shingleN, dfCap) " +
+        "— table is a string literal naming a view with (doc_id, text)") {
+      (view, a) =>
+        graft.operators.Dedup.jaccardPairsOf(view,
+          n = intArg(a(1), "shingleN"), dfCap = intArg(a(2), "dfCap").toLong)
+    }
+    viewTvf(ext, "span_trim", 1, "span_trim(table) — table is a string " +
+        "literal naming a view with (doc_id, text)") { (view, _) =>
+      graft.operators.TextAnalysis.trimmedDocsOf(view)
+        .select(col("doc_id"), concat_ws(" ", col("kept")).as("text"),
+          col("was_trimmed"), col("ntok_before"),
+          size(col("kept")).cast("long").as("ntok_after"))
+    }
+    viewTvf(ext, "semdedup", 2, "semdedup(table, tau) — table names a " +
+        "view with (vec_id, embedding); tau is the cosine threshold as a " +
+        "string literal") { (view, a) =>
+      val tau = strArg(a(1), "semdedup tau")
+      require(tau.matches("""[0-9]+(\.[0-9]+)?([eE]-?[0-9]+)?"""),
+        s"semdedup tau must be a plain decimal, got $tau")
+      graft.operators.Similarity.semDedupOf(view, tau.toDouble)
+    }
+    viewTvf(ext, "dsir_select", 3, "dsir_select(table, targetLang, " +
+        "budgetDiv) — table names a view with (doc_id, lang, text)") {
+      (view, a) =>
+        val lang = strArg(a(1), "dsir_select targetLang")
         require(lang.matches("[A-Za-z_-]+"),
           s"dsir_select targetLang must be a plain language tag, got $lang")
-        val div = intArg(args(2), "budgetDiv")
+        val div = intArg(a(2), "budgetDiv")
         require(div >= 1, s"budgetDiv must be >= 1, got $div")
-        parsePlanHinted(dsirSelectSql(tbl, lang, div),
-          merge = Set.empty, bcast = Set("t", "w", "c"))
-      }))
-    // CC NEAR-DUP CLUSTERING from SQL text — the verb a parsed-SQL
-    // template cannot express: connectedComponents is an O(log n)
-    // large-star/small-star LOOP with per-round checkpoints, counts
-    // and a size-gated local finish, so this TVF is EAGER — the
-    // builder calls the library path ([[graft.operators.Dedup
-    // .dupClustersOf]]) on the named view DURING ANALYSIS and splices
-    // the resulting (checkpoint-backed) plan into the outer query.
-    // Consequences a SQL caller must know: (a) the contraction rounds'
-    // Spark jobs run when the statement is ANALYZED (sql(...) call),
-    // not when the result is fetched; (b) the result is pinned to the
-    // view's content at analysis time. Args beyond the view name are
-    // literal ints: shingle width n, df cap, and the jaccard threshold
-    // as an integer percentage (50 ⇔ the q_dup_clusters boundary
-    // 3·inter > na+nb, applied in exact integer arithmetic).
-    ext.injectTableFunction((
-      FunctionIdentifier("dup_clusters"),
-      info("dup_clusters"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          "dup_clusters(table, shingleN, dfCap, tauPct) — table names " +
-            "a view with (doc_id, text); tauPct is jaccard·100")
-        val tbl = ident(strArg(args(0), "dup_clusters table"))
-        val n = intArg(args(1), "shingleN")
-        val cap = intArg(args(2), "dfCap")
-        val tauPct = intArg(args(3), "tauPct")
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Dedup
-          .dupClustersOf(s.table(tbl), n = n, dfCap = cap.toLong,
-            tauPct = tauPct)
-          .queryExecution.logical
-      }))
-    // THE FULL CURATION COMPOSITION from SQL text — q_curate_full
-    // (length gate → exact dedup → span trim → leakage-repaired train
-    // split → DSIR selection, with the six-stage census) over any
-    // (doc_id, source, lang, text) view. EAGER for the same reason as
-    // dup_clusters: stage 4 runs the CC loop and stage 5 needs the
-    // survivor count for its budget — jobs run at ANALYSIS time and
-    // the result is pinned to the view's content then. With span_trim
-    // + dedup_pairs + semdedup + dsir_select this closes the SQL
-    // story: every curation verb AND the end-to-end composition are
-    // reachable from pure SQL text.
-    ext.injectTableFunction((
-      FunctionIdentifier("curate"),
-      info("curate"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "curate(table) — table names a view with " +
-            "(doc_id, source, lang, text)")
-        val tbl = ident(strArg(args(0), "curate table"))
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Curate.curateFullOf(s.table(tbl))
-          .queryExecution.logical
-      }))
-    // GRAPH ANN from SQL text — EAGER for the dup_clusters reason: the
-    // beam walk is a driver loop (ladder count + per-hop checkpoints
-    // with generation hygiene), not a parsed-SQL template. The builder
-    // runs [[graft.operators.Similarity.annGraphOf]] on the named
-    // (vec_id, embedding) view during analysis and splices the
-    // checkpoint-backed plan in; same caveats as dup_clusters — index
-    // build + walk jobs run when the statement is ANALYZED, result
-    // pinned to the view's content at that moment.
-    ext.injectTableFunction((
-      FunctionIdentifier("ann_graph"),
-      info("ann_graph"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          "ann_graph(table) — table names a view with " +
-            "(vec_id, embedding); queries are the vec_id < 20 slice")
-        val tbl = ident(strArg(args(0), "ann_graph table"))
-        val s = org.apache.spark.sql.SparkSession.active
-        graft.operators.Similarity.annGraphOf(s.table(tbl))
-          .queryExecution.logical
-      }))
+        import graft.operators.Sampling.{dsirScored, dsirSelectFrom}
+        dsirSelectFrom(dsirScored(view, lang), view.count() / div)
+    }
+    viewTvf(ext, "dup_clusters", 4, "dup_clusters(table, shingleN, dfCap, " +
+        "tauPct) — table names a view with (doc_id, text); tauPct is " +
+        "jaccard·100") { (view, a) =>
+      graft.operators.Dedup.dupClustersOf(view, n = intArg(a(1), "shingleN"),
+        dfCap = intArg(a(2), "dfCap").toLong,
+        tauPct = intArg(a(3), "tauPct"))
+    }
+    viewTvf(ext, "curate", 1,
+        "curate(table) — table names a view with (doc_id, source, lang, text)") {
+      (view, _) => graft.operators.Curate.curateFullOf(view)
+    }
+    viewTvf(ext, "ann_graph", 1, "ann_graph(table) — table names a view " +
+        "with (vec_id, embedding); queries are the vec_id < 20 slice") {
+      (view, _) => graft.operators.Similarity.annGraphOf(view)
+    }
     // THE STANDING-STORE PROBES from SQL text: one TVF per
     // [[graft.sources.Stores]] family (its `probeTvf`). Each takes the
     // store's CORPUS DIRECTORY (stores are keyed by dir, not view —
     // they are cross-session standing state) and expands to the exact
     // library probe plan: batch side fingerprinted/shingled fresh and
     // shuffled once to the store's bucket granularity, store side
-    // streaming off its bucketed files merge-hinted (never a broadcast
-    // — the hint is already structural in the library plan, so no
-    // parsePlanHinted needed). EAGER store ensure: a missing store is
-    // built at ANALYSIS time (the dup_clusters/curate job-at-analysis
-    // caveat; the graph walk is a driver loop).
+    // streaming off its bucketed files merge-hinted (never a broadcast).
+    // EAGER like the view TVFs above: a missing store is built at
+    // ANALYSIS time (the graph walk is a driver loop).
     graft.sources.Stores.all.foreach { st =>
       ext.injectTableFunction((
         FunctionIdentifier(st.probeTvf),
@@ -360,7 +222,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"${st.probeTvf}(corpusDir) — the standing ${st.family} " +
               "store's corpus directory (string literal)")
           val d = strArg(args(0), s"${st.probeTvf} corpus dir")
-          st.probe(org.apache.spark.sql.SparkSession.active, d)
+          st.probe(SparkSession.active, d)
             .queryExecution.logical
         }))
     }
@@ -391,7 +253,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             "family's grain columns")
         val st = graft.sources.Stores(strArg(args(0), "append_store family"))
         val d = strArg(args(1), "append_store corpus dir")
-        val v = ident(strArg(args(2), "append_store batch table"))
+        val v = ident(strArg(args(2), "append_store batch table"),
+          "append_store batch table")
         graft.plans.StoreMaintenanceCommand("append", st.family, s => {
           val batch = s.table(v)
           val tbl = st.ensure(s, d)
@@ -419,207 +282,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   /** The maintenance verbs' one-row status: the store's post-op row
     * count. */
-  private def storeStatus(s: org.apache.spark.sql.SparkSession,
+  private def storeStatus(s: SparkSession,
                           fam: String,
-                          tbl: String): Seq[org.apache.spark.sql.Row] = {
+                          tbl: String): Seq[Row] = {
     s.catalog.refreshTable(tbl)
-    Seq(org.apache.spark.sql.Row(fam, tbl, s.table(tbl).count()))
+    Seq(Row(fam, tbl, s.table(tbl).count()))
   }
 
-  private def parsePlan(sql: String) =
-    org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parsePlan(sql)
+  /** Register a curation-verb TVF over a view: check the arity and the
+    * table identifier, resolve the view, and return the plan of the
+    * frame `plan` builds from it and the remaining args. */
+  private def viewTvf(ext: SparkSessionExtensions, name: String,
+                      arity: Int, usage: String)(
+      plan: (DataFrame, Seq[Expression]) => DataFrame): Unit =
+    ext.injectTableFunction((
+      FunctionIdentifier(name),
+      info(name),
+      (args: Seq[Expression]) => {
+        require(args.length == arity, usage)
+        val tbl = ident(strArg(args(0), s"$name table"), s"$name table")
+        plan(SparkSession.active.table(tbl), args).queryExecution.logical
+      }))
 
-  /** Parse TVF SQL and pin join strategies STRUCTURALLY. SQL hint
-    * comments (`/*+ MERGE(x) */`) are useless here: the analyzer's
-    * Hints batch has already run when a TVF plan is introduced
-    * mid-analysis (the CTESubstitution late-introduction class), so
-    * UnresolvedHint never resolves and AQE is free to broadcast a
-    * corpus-grown side — the q_bigram_lm sf10 OOM class, observed live
-    * on the span_trim expansion's anchor self-join. Instead, wrap the
-    * named subquery aliases in ResolvedHint directly (exactly what
-    * ResolveJoinStrategyHints would have produced): merge-pin every
-    * corpus-grown join side, broadcast-pin only vocabulary-/model-
-    * bounded sides. Aliases must be unique within one expansion. */
-  private def parsePlanHinted(sql: String, merge: Set[String],
-      bcast: Set[String] = Set.empty) = {
-    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, ResolvedHint, SHUFFLE_MERGE, SubqueryAlias}
-    parsePlan(sql).transformUp {
-      case s: SubqueryAlias if merge.contains(s.alias) =>
-        ResolvedHint(s, HintInfo(strategy = Some(SHUFFLE_MERGE)))
-      case s: SubqueryAlias if bcast.contains(s.alias) =>
-        ResolvedHint(s, HintInfo(strategy = Some(BROADCAST)))
-    }
-  }
-
-  /** Table args are spliced into SQL text — identifiers only, no
-    * expression injection (the dedup_pairs rule). */
-  private def ident(tbl: String): String = {
+  /** View and table args must be bare identifiers. */
+  private def ident(tbl: String, what: String): String = {
     require(tbl.matches("[A-Za-z_][A-Za-z0-9_.]*"),
-      s"table must be a plain identifier, got $tbl")
+      s"$what must be a plain identifier, got $tbl")
     tbl
-  }
-
-  /** The [[graft.operators.TextAnalysis.trimmedDocsOf]] pipeline as
-    * inlined-derived-table SQL (CTEs don't survive late introduction —
-    * the dedup_pairs rule). Output: (doc_id, text, was_trimmed,
-    * ntok_before, ntok_after). */
-  private def spanTrimSql(tbl: String): String = {
-    import graft.operators.TextAnalysis.{MinSpanAnchors, SpanDfCap, SpanK, SpanOccCap}
-    val toks = "split(text, ' ')"
-    val spans =
-      s"transform(sequence(1, greatest(size($toks) - ${SpanK - 1}, 1)), " +
-        s"i -> concat_ws(' ', slice($toks, i, $SpanK)))"
-    val anchors =
-      s"""SELECT doc_id, CAST(pos + 1 AS BIGINT) AS pos, md5_prefix60(g) AS h
-         |FROM (SELECT doc_id, posexplode($spans) AS (pos, g) FROM $tbl)"""
-        .stripMargin
-    // df bounds docs per anchor, occ bounds total positions (the occ²
-    // join-bucket rule); > 1 keeps only genuinely shared anchors
-    val dup =
-      s"""SELECT h FROM ($anchors) GROUP BY h
-         |HAVING count(DISTINCT doc_id) > 1
-         |  AND count(DISTINCT doc_id) <= $SpanDfCap
-         |  AND count(*) <= $SpanOccCap""".stripMargin
-    val ha =
-      s"""SELECT a.doc_id, a.pos, a.h
-         |FROM ($anchors) a LEFT SEMI JOIN ($dup) d ON a.h = d.h"""
-        .stripMargin
-    val pr =
-      s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  a.pos AS pa, b.pos AS pb
-         |FROM ($ha) a JOIN ($ha) b
-         |  ON a.h = b.h AND a.doc_id < b.doc_id""".stripMargin
-    // gaps-and-islands on each pair diagonal: consecutive anchors chain
-    val sp =
-      s"""SELECT doc_a, doc_b, min(pa) AS start_a, min(pb) AS start_b,
-         |  count(*) + ${SpanK - 1} AS len
-         |FROM (SELECT doc_a, doc_b, pa, pb, pa - pb AS diag,
-         |    pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb
-         |      ORDER BY pa ASC) AS grp FROM ($pr))
-         |GROUP BY doc_a, doc_b, diag, grp
-         |HAVING count(*) >= $MinSpanAnchors""".stripMargin
-    val iv =
-      s"""SELECT doc_id, collect_list(struct(st, en)) AS ivs
-         |FROM (SELECT DISTINCT doc_id, st, en FROM (
-         |  SELECT doc_a AS doc_id, start_a AS st,
-         |    start_a + len - 1 AS en FROM ($sp)
-         |  UNION ALL
-         |  SELECT doc_b, start_b, start_b + len - 1 FROM ($sp)))
-         |GROUP BY doc_id""".stripMargin
-    s"""SELECT doc_id, concat_ws(' ', kept) AS text, was_trimmed,
-       |  ntok_before, CAST(size(kept) AS BIGINT) AS ntok_after
-       |FROM (SELECT t.doc_id,
-       |    CASE WHEN iv.ivs IS NULL THEN split(t.text, ' ')
-       |      ELSE filter(split(t.text, ' '), (tok, i) ->
-       |        NOT exists(iv.ivs, v -> v.st <= i + 1 AND i + 1 <= v.en))
-       |    END AS kept,
-       |    iv.ivs IS NOT NULL AS was_trimmed,
-       |    CAST(size(split(t.text, ' ')) AS BIGINT) AS ntok_before
-       |  FROM $tbl t LEFT JOIN ($iv) iv ON t.doc_id = iv.doc_id)"""
-      .stripMargin
-  }
-
-  /** The [[graft.operators.Similarity.qSemDedup]] census as
-    * inlined-derived-table SQL. Cells scale-parameterized at
-    * max(16, ⌈√N⌉) via a scalar subquery (engine-identical: IEEE sqrt
-    * of an exact integer is correctly rounded). Cell labels are the
-    * DENSE ORDINAL (row_number over vec_id order) of the centroid,
-    * not vec_id+1, and an all-NaN cosine row (zero vector) labels as
-    * cell 0 — both exactly mirroring the library's NearestCentroid
-    * scan (1-based position in the vec_id-sorted collected array,
-    * `best` never updated from 0 when every comparison is NaN), so
-    * the bit-equal-to-library contract holds on arbitrary user views
-    * with gaps in vec_id, not just this repo's contiguous ids. */
-  private def semdedupSql(tbl: String, tau: String): String = {
-    val cells =
-      s"""(SELECT greatest(${graft.operators.Similarity.Cells}L,
-         |  CAST(ceil(sqrt(count(*))) AS BIGINT)) FROM $tbl)""".stripMargin
-    // bounded window: row_number runs over the √N-bounded centroid
-    // set only (the model side), never the corpus
-    val cents =
-      s"""SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS ci,
-         |  embedding AS cv FROM $tbl WHERE vec_id < $cells""".stripMargin
-    // argmax cosine, ties → lowest ordinal: min(struct(-cos, ci)) —
-    // double negation is exact, struct compare is lexicographic, and
-    // Spark orders NaN above every double so NaN cosines lose to any
-    // real one (= the library's `cos > bestCos` skip). Partial-agg
-    // friendly (no N·√N window shuffle); the centroid side is
-    // √N-bounded → broadcast (the bounded-model discipline).
-    val assign =
-      s"""SELECT vec_id, embedding,
-         |  CASE WHEN isnan(ms.nc) THEN 0L ELSE ms.ci END AS cell
-         |FROM (SELECT e.vec_id, e.embedding,
-         |    min(struct(-cosine_sim(e.embedding, c.cv) AS nc, c.ci AS ci))
-         |      AS ms
-         |  FROM $tbl e CROSS JOIN ($cents) c
-         |  GROUP BY e.vec_id, e.embedding)""".stripMargin
-    val dropped =
-      s"""SELECT DISTINCT b.cell AS cell, b.vec_id AS vec_id
-         |FROM ($assign) a JOIN ($assign) b
-         |  ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  AND cosine_sim(a.embedding, b.embedding) > CAST('$tau' AS DOUBLE)"""
-        .stripMargin
-    s"""SELECT a.cell AS cell, count(*) AS n_vecs,
-       |  sum(CASE WHEN d.vec_id IS NOT NULL THEN 1L ELSE 0L END)
-       |    AS n_dropped,
-       |  coalesce(bit_xor(CASE WHEN d.vec_id IS NOT NULL
-       |    THEN a.vec_id * 1000003 END), 0L) AS dropped_checksum,
-       |  coalesce(bit_xor(CASE WHEN d.vec_id IS NULL THEN a.vec_id END), 0L)
-       |    AS kept_checksum
-       |FROM ($assign) a LEFT JOIN ($dropped) d
-       |  ON a.cell = d.cell AND a.vec_id = d.vec_id
-       |GROUP BY a.cell ORDER BY a.cell ASC""".stripMargin
-  }
-
-  /** [[graft.operators.Sampling.dsirScored]] +
-    * [[graft.operators.Sampling.dsirSelectFrom]] as inlined SQL:
-    * integer-exact hashed-unigram importance scores, then the exact
-    * top-(count DIV budgetDiv) via the bounded score-bucket histogram
-    * (whole buckets above the boundary, a partitioned window INSIDE
-    * the one boundary bucket — never a data-sized global window).
-    * Output: the selected (doc_id, lang, score). */
-  private def dsirSelectSql(tbl: String, lang: String, div: Int): String = {
-    import graft.operators.Sampling.{DsirBuckets, DsirScale, DsirShift, DsirStep}
-    val tk =
-      s"""SELECT doc_id, lang, pmod(md5_prefix60(term), ${DsirBuckets}L) AS b
-         |FROM (SELECT doc_id, lang, explode(split(text, ' ')) AS term
-         |  FROM $tbl) WHERE term != ''""".stripMargin
-    val bs =
-      s"""SELECT b, count(*) AS c_raw,
-         |  sum(CASE WHEN lang = '$lang' THEN 1L ELSE 0L END) AS c_tgt
-         |FROM ($tk) GROUP BY b""".stripMargin
-    val tot =
-      s"""SELECT sum(c_raw) AS t_raw, greatest(sum(c_tgt), 1L) AS t_tgt
-         |FROM ($bs)""".stripMargin
-    val w =
-      s"""SELECT b,
-         |  (c_tgt + 1) * ${DsirScale}L DIV (c_raw + 1)
-         |    - t_tgt * ${DsirScale}L DIV t_raw AS wt
-         |FROM ($bs) CROSS JOIN ($tot) t""".stripMargin
-    // ≤ DsirBuckets rows by construction — always broadcast-safe
-    val ds =
-      s"""SELECT doc_id, max(lang) AS lang,
-         |  sum(wt) AS score,
-         |  (sum(wt) + ${DsirShift}L) DIV ${DsirStep}L AS bkt
-         |FROM ($tk) tk JOIN ($w) w ON tk.b = w.b GROUP BY doc_id"""
-        .stripMargin
-    val bc =
-      s"""SELECT bkt, cnt, coalesce(sum(cnt) OVER (ORDER BY bkt DESC
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0L) AS above
-         |FROM (SELECT bkt, count(*) AS cnt FROM ($ds) GROUP BY bkt)"""
-        .stripMargin
-    val budget = s"(SELECT count(*) DIV $div FROM $tbl)"
-    s"""SELECT d.doc_id, d.lang, d.score
-       |FROM ($ds) d JOIN ($bc) c ON d.bkt = c.bkt
-       |WHERE c.above + c.cnt <= $budget
-       |UNION ALL
-       |SELECT doc_id, lang, score FROM (
-       |  SELECT d.doc_id, d.lang, d.score, c.above,
-       |    row_number() OVER (PARTITION BY d.bkt
-       |      ORDER BY d.score DESC, d.doc_id ASC) AS rnk
-       |  FROM ($ds) d JOIN ($bc) c ON d.bkt = c.bkt
-       |  WHERE c.above < $budget AND c.above + c.cnt > $budget)
-       |WHERE rnk <= $budget - above""".stripMargin
   }
 
   /** Parse a SQL expression template and splice `arg` where the

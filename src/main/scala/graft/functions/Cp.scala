@@ -128,6 +128,19 @@ object Cp {
   def scoped[T](s: SparkSession)(body: => T): T =
     created(s)(body)(dropGeneration(s, _))
 
+  /** Checkpoint the frame `build` returns through [[local]], then drop
+    * the checkpoints that building it created — also when either step
+    * throws. The new checkpoint truncates the lineage, so an upstream
+    * pipeline's blocks (the pair pipeline's posting tables under a
+    * near-dup edge list) die with the call instead of on a driver GC.
+    * A `build` that creates no checkpoint (one reading the shared
+    * [[graft.operators.Dedup.withSharedPairs]] build) drops nothing. */
+  def localReplacing[T](s: SparkSession)(build: => Dataset[T]): Dataset[T] = {
+    var gen = Set.empty[Int]
+    try local(created(s)(build)(gen = _))
+    finally dropGeneration(s, gen)
+  }
+
   /** ITERATIVE-ROUND checkpoint generations. Each `round { ... }` runs
     * its body, keeps the localCheckpoints the body created live, and
     * drops the previous round's once the body has returned — eager

@@ -542,8 +542,12 @@ object Dedup {
     val dsr = graft.functions.Cp.localClusteredAs(
       ds.join(rare.hint("merge"), Seq("s"), "left_semi"),
       nPart, Seq("s"), sorted = true)
+    // merge-pinned: a small corpus's posting table slides under the
+    // broadcast threshold, and the planner would broadcast one side of
+    // the co-partitioned, sorted self-join
     val base = dsr.as("a")
-      .join(dsr.as("b"), $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id")
+      .join(dsr.as("b").hint("merge"),
+        $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id")
       .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
         $"a.n".as("na"), $"b.n".as("nb"))
       .agg(count(lit(1)).as("inter"))
@@ -1289,8 +1293,8 @@ object Dedup {
     // ways at sf10 isolated (the per-round label side stays under the
     // broadcast threshold, so the edge side never re-shuffles anyway);
     // rejected per measure-before-adopt (BASELINE.md wave 4).
-    val e = undirected(nearDupEdges(s, d), "u", "v")
-      .transform(graft.functions.Cp.local)
+    val e = graft.functions.Cp.localReplacing(s)(
+      undirected(nearDupEdges(s, d), "u", "v"))
     val round = graft.functions.Cp.rounds(s)
     val seed = e.select($"u".as("node")).distinct()
       .select($"node", $"node".as("label"))
@@ -1359,7 +1363,7 @@ object Dedup {
     // three times (forward, reversed, roots anti-probe) and each
     // recursion round references `e` again — without the checkpoint
     // every reference re-runs the full shingle pair join
-    nearDupEdges(s, d).transform(graft.functions.Cp.local)
+    graft.functions.Cp.localReplacing(s)(nearDupEdges(s, d))
       .createOrReplaceTempView("graft_dup_edges")
     s.sql(
       """WITH RECURSIVE
@@ -1393,7 +1397,7 @@ object Dedup {
   def qTriangles(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val nPart = graft.Tables.clusterParts(Tables.documents(s, d))
-    val e = nearDupEdges(s, d).transform(graft.functions.Cp.local)
+    val e = graft.functions.Cp.localReplacing(s)(nearDupEdges(s, d))
     val deg = e.select(explode(array($"doc_a", $"doc_b")).as("v"))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
     // clustered+sorted on src: the wedge self-join below reads BOTH
@@ -1618,7 +1622,7 @@ object Dedup {
     * checksum. Oracle: the same recursive SQL in DuckDB. */
   def qReachability(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    undirected(nearDupEdges(s, d).transform(graft.functions.Cp.local),
+    undirected(graft.functions.Cp.localReplacing(s)(nearDupEdges(s, d)),
       "u", "v").createOrReplaceTempView("graft_nd_edges")
     s.sql(
       s"""WITH RECURSIVE reach(node, depth) AS (

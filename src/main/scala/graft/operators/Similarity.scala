@@ -1188,9 +1188,13 @@ object Similarity {
     * bug this parameterization removes). The √N-bounded centroid
     * collect is the model-collect discipline; the census is one
     * bounded agg with kept/dropped bit_xor placement proofs. */
-  def qSemDedup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
+  def qSemDedup(s: SparkSession, d: String): DataFrame =
+    semDedupOf(Tables.embeddings(s, d), SemTau)
+
+  /** The [[qSemDedup]] census over any (vec_id, embedding) frame at
+    * cosine threshold `tau` (the `semdedup` SQL table function). */
+  private[graft] def semDedupOf(emb: DataFrame, tau: Double): DataFrame = {
+    import emb.sparkSession.implicits._
     val semCells = math.max(Cells,
       math.ceil(math.sqrt(emb.count().toDouble)).toInt)
     // Driver-memory bound of the model collect: √N · Dims · 4 B. At
@@ -1214,7 +1218,7 @@ object Similarity {
     val dropped = corpus.as("a")
       .join(corpus.as("b").hint("merge"),
         $"a.cell" === $"b.cell" && $"a.vec_id" < $"b.vec_id" &&
-          cosineFast($"a.embedding", $"b.embedding") > SemTau)
+          cosineFast($"a.embedding", $"b.embedding") > tau)
       .select($"b.cell".as("cell"), $"b.vec_id".as("vec_id"))
       .distinct()
     corpus.select($"cell", $"vec_id")

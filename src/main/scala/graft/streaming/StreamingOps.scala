@@ -155,66 +155,6 @@ object StreamingOps {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onUser)
   }
 
-  /** Gap sessionization on the transformWithState API (Spark 4's
-    * successor to flatMapGroupsWithState): explicit named ValueState +
-    * event-time timers, RocksDB-backed. Same semantics as
-    * [[sessionize]]; kept alongside it to cover both state APIs. */
-  class SessionProcessor(gapMinutes: Int)
-      extends StatefulProcessor[Long, Ev, SessionOut] {
-    private val gapUs = gapMinutes.toLong * 60 * 1000000
-    private val gapMs = gapMinutes.toLong * 60 * 1000
-    @transient private var st: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessionState](
-        "session", Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Ev],
-                                 tv: TimerValues): Iterator[SessionOut] = {
-      // transformWithState also delivers below-watermark rows; drop them
-      // so late events can't rewind already-emitted sessions.
-      val wmMs = tv.getCurrentWatermarkInMs()
-      val sorted = rows.filter(_.ts.getTime >= wmMs)
-        .toSeq.sortBy(e => (e.ts.getTime, e.eventId))
-      var cur = if (st.exists()) Some(st.get()) else None
-      var closed = List.empty[SessionOut]
-      for (e <- sorted) {
-        val us = e.ts.getTime * 1000
-        cur match {
-          // a late (out-of-order but in-watermark) event extends the
-          // session boundaries, never regresses them
-          case Some(s) if us - s.lastUs <= gapUs =>
-            cur = Some(SessionState(math.min(s.startUs, us),
-              math.max(s.lastUs, us), s.nEvents + 1))
-          case Some(s) =>
-            closed ::= SessionOut(userId, s.startUs, s.lastUs, s.nEvents)
-            cur = Some(SessionState(us, us, 1))
-          case None =>
-            cur = Some(SessionState(us, us, 1))
-        }
-      }
-      cur.foreach { s =>
-        st.update(s)
-        getHandle.registerTimer(s.lastUs / 1000 + gapMs)
-      }
-      closed.reverseIterator
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[SessionOut] = {
-      // stale timers from earlier events in the same session fire too:
-      // only close when the gap has truly passed
-      if (st.exists()) {
-        val s = st.get()
-        if (info.getExpiryTimeInMs() >= s.lastUs / 1000 + gapMs) {
-          st.clear()
-          return Iterator(SessionOut(userId, s.startUs, s.lastUs, s.nEvents))
-        }
-      }
-      Iterator.empty
-    }
-  }
-
   /** Streaming SCD TYPE-2 — the live twin of batch `q_scd2`: per-user
     * `eventType` is a mutable attribute; each change CLOSES the
     * previous validity interval (emitted downstream, Append mode) and
@@ -293,17 +233,6 @@ object StreamingOps {
       .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new Scd2Processor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** [[sessionize]] on the transformWithState API. Requires the
-    * RocksDB state store provider. */
-  def sessionizeTws(events: Dataset[Ev], gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", s"$gapMinutes minutes")
-      .groupByKey(_.userId)
-      .transformWithState(new SessionProcessor(gapMinutes),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
@@ -390,104 +319,6 @@ object StreamingOps {
       .withWatermark("ts", "30 minutes")
       .groupByKey(_.userId)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(onUser)
-  }
-
-  /** [[funnel]] on the transformWithState API: same per-event
-    * conversion decision (in time order, inside the loop — see the
-    * classic twin for why), explicit named ValueState, event-time
-    * timer for horizon cleanup. */
-  class FunnelProcessor(horizonMinutes: Int)
-      extends StatefulProcessor[Long, Ev, Conversion] {
-    private val none = -1L
-    private val horizonMs = horizonMinutes.toLong * 60 * 1000
-    @transient private var st: ValueState[FunnelState] = _
-
-    /** The horizon expiry for the CURRENT state, or `none` if the state
-      * carries nothing worth keeping. Timers registered in earlier
-      * batches are not deleted, so the expiry handler must recompute
-      * this and ignore any timer that fires before it. */
-    private def horizonFor(s: FunnelState): Long = {
-      val anchorUs =
-        if (s.firstSignupUs != none) s.firstSignupUs else s.pendingPurchaseUs
-      if (anchorUs == none) none else anchorUs / 1000 + horizonMs
-    }
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState](
-        "funnel", Encoders.product[FunnelState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Ev],
-                                 tv: TimerValues): Iterator[Conversion] = {
-      val wmMs = tv.getCurrentWatermarkInMs()
-      val sorted = rows.filter(_.ts.getTime >= wmMs)
-        .toSeq.sortBy(e => (e.ts.getTime, e.eventId))
-      var s = if (st.exists()) st.get()
-              else FunnelState(none, none, converted = false)
-      var out = List.empty[Conversion]
-      for (e <- sorted) {
-        val us = e.ts.getTime * 1000
-        e.eventType match {
-          case "signup" if !s.converted =>
-            s = s.copy(firstSignupUs =
-              if (s.firstSignupUs == none) us else math.min(s.firstSignupUs, us))
-          case "purchase" if !s.converted =>
-            if (s.firstSignupUs != none && us >= s.firstSignupUs) {
-              out ::= Conversion(userId, s.firstSignupUs, us, us - s.firstSignupUs)
-              s = s.copy(converted = true, pendingPurchaseUs = none)
-            } else {
-              s = s.copy(pendingPurchaseUs =
-                if (s.pendingPurchaseUs == none) us
-                else math.min(s.pendingPurchaseUs, us))
-            }
-          case _ =>
-        }
-      }
-      if (!s.converted && s.firstSignupUs != none && s.pendingPurchaseUs != none) {
-        if (s.pendingPurchaseUs >= s.firstSignupUs) {
-          out ::= Conversion(userId, s.firstSignupUs, s.pendingPurchaseUs,
-            s.pendingPurchaseUs - s.firstSignupUs)
-          s = s.copy(converted = true, pendingPurchaseUs = none)
-        } else {
-          s = s.copy(pendingPurchaseUs = none)
-        }
-      }
-      // as in the classic twin: never persist (or anchor a timer on) a
-      // state that carries nothing — the epoch anchor it would produce
-      // becomes a stale timer that fires immediately at realistic
-      // watermarks
-      val horizon = horizonFor(s)
-      if (s.converted || horizon != none) {
-        st.update(s)
-        getHandle.registerTimer(math.max(tv.getCurrentWatermarkInMs() + 1, horizon))
-      }
-      out.reverseIterator
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Conversion] = {
-      // timers from earlier batches are never deleted, and the anchor
-      // can move LATER (a pre-signup pending purchase is dropped when
-      // the signup lands) — so an earlier timer can fire while the
-      // state is still live. Clear only when the firing timer is at or
-      // past the horizon of the state AS IT IS NOW (the same stale-
-      // timer guard SessionProcessor uses).
-      if (st.exists()) {
-        val horizon = horizonFor(st.get())
-        if (horizon != none && info.getExpiryTimeInMs() >= horizon) st.clear()
-      }
-      Iterator.empty
-    }
-  }
-
-  /** [[funnel]] on the transformWithState API. Requires the RocksDB
-    * state store provider. */
-  def funnelTws(events: Dataset[Ev], horizonMinutes: Int = 60 * 24): Dataset[Conversion] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupByKey(_.userId)
-      .transformWithState(new FunnelProcessor(horizonMinutes),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** INCREMENTAL SEQUENCE PACKING — the streaming twin of batch

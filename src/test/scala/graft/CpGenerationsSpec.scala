@@ -5,8 +5,9 @@ import graft.functions.Cp
 
 /** The checkpoint-generation policy of graft.functions.Cp: `rounds`
   * keeps an iterative loop to two live generations without cutting
-  * the lineage of the frame it returns, and `scoped` drops a one-shot
-  * verb's checkpoints whatever way the verb exits. */
+  * the lineage of the frame it returns, `scoped` drops a one-shot
+  * verb's checkpoints whatever way the verb exits, and
+  * `localReplacing` drops the checkpoints its frame was built from. */
 class CpGenerationsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -53,5 +54,41 @@ class CpGenerationsSpec extends AnyFunSuite {
     assert(e.getMessage == "boom")
     assert(made.nonEmpty, "the body's checkpoint must have materialized")
     assert(made.intersect(persisted).isEmpty)
+  }
+
+  test("near-dup graph queries drop the pair pipeline's posting " +
+       "checkpoints, and a shared pair build survives them") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import graft.operators.Dedup
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val queries = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "q_label_prop" -> Dedup.qLabelProp, "q_triangles" -> Dedup.qTriangles,
+      "q_dup_depth" -> Dedup.qDupDepth, "q_reachability" -> Dedup.qReachability)
+    for ((name, q) <- queries) {
+      // the posting tables are the (doc_id, n, s) checkpoints the
+      // recorded checkpoint inputs scan
+      var recorded = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
+      Cp.startRecording()
+      val df = try q(spark, sf) finally recorded = Cp.stopRecording()
+      val posting = recorded.flatMap(_.collect {
+        case r: RDDScanExec if r.output.map(_.name) == Seq("doc_id", "n", "s") =>
+          r.rdd.id
+      }).toSet
+      val first = rows(df)
+      assert(posting.nonEmpty, s"$name built no posting table")
+      assert(posting.intersect(persisted).isEmpty,
+        s"$name: posting checkpoints $posting outlive the query")
+      assert(rows(df) === first, s"$name must re-evaluate to the same rows")
+      val base = persisted
+      Dedup.withSharedPairs(spark, sf) {
+        val shared = persisted -- base
+        assert(shared.nonEmpty)
+        assert(rows(q(spark, sf)) === first, name)
+        assert(shared.subsetOf(persisted),
+          s"$name dropped the shared pair build")
+      }
+    }
   }
 }

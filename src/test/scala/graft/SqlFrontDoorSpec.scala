@@ -63,10 +63,10 @@ class SqlFrontDoorSpec extends AnyFunSuite {
     assert(rows(tvf) === rows(composed))
   }
 
-  // dedup pair pipeline from SQL text: the TVF expands to parsed SQL
-  // over the registered shingle_hash60 and must match the library's
-  // jaccardPairs (the oracle-gated substrate of the whole dup family)
-  // bit-for-bit, including the df-cap
+  // dedup pair pipeline from SQL text: the TVF returns the library's
+  // pair plan over the view and must match jaccardPairs (the
+  // oracle-gated substrate of the whole dup family) bit-for-bit,
+  // including the df-cap
   test("sql: dedup_pairs TVF equals the library pair pipeline") {
     views
     val tvf = spark.sql(
@@ -225,8 +225,9 @@ class SqlFrontDoorSpec extends AnyFunSuite {
     assert(tvf.filter($"was_trimmed").limit(1).count() === 1L)
     // the late-introduction hint regression class: SQL hint comments
     // never resolve in TVF plans, so the corpus-grown joins must be
-    // merge-pinned STRUCTURALLY (parsePlanHinted) — no broadcast
-    // anywhere in this expansion (every join side is corpus-grown)
+    // merge-pinned STRUCTURALLY (the library plan's resolved hints) —
+    // no broadcast anywhere in this plan (every join side is
+    // corpus-grown)
     assert(!executedContains(tvf, "BroadcastHashJoin"),
       "span_trim TVF must never broadcast a corpus-grown side")
   }
@@ -239,8 +240,8 @@ class SqlFrontDoorSpec extends AnyFunSuite {
       "dedup_pairs TVF must never broadcast a corpus-grown side")
   }
 
-  // semdedup TVF: relational nearest-centroid assignment + ε-ball
-  // census from SQL text equals the library's fused-expression path
+  // semdedup TVF: the nearest-centroid assignment + ε-ball census
+  // from SQL text equals the library path
   test("sql: semdedup TVF equals the library census") {
     views
     val tvf = spark.sql(
@@ -271,6 +272,29 @@ class SqlFrontDoorSpec extends AnyFunSuite {
     assert(rows(tvf) === rows(lib))
     // the budget is live and exact
     assert(tvf.count() === docs.count() / 10)
+  }
+
+  // the curation-verb TVFs validate their outside input before any
+  // work: arity, a bare-identifier table, the tau and language-tag
+  // shapes, and a budget divisor of at least 1
+  test("sql: dedup_pairs/span_trim/semdedup/dsir_select reject bad arguments") {
+    views
+    for ((call, msg) <- Seq(
+      "dedup_pairs('sql_docs', 5)" -> "dedup_pairs(table, shingleN, dfCap)",
+      "span_trim('sql_docs', 'x')" -> "span_trim(table)",
+      "semdedup('sql_emb')" -> "semdedup(table, tau)",
+      "dsir_select('sql_docs', 'en')" -> "dsir_select(table, targetLang, budgetDiv)",
+      "dedup_pairs('sql docs', 5, 256)" -> "must be a plain identifier",
+      "span_trim('1docs')" -> "must be a plain identifier",
+      "semdedup('sql_emb;x', '0.45')" -> "must be a plain identifier",
+      "dsir_select('sql-docs', 'en', 10)" -> "must be a plain identifier",
+      "semdedup('sql_emb', '0.4x')" -> "semdedup tau must be a plain decimal",
+      "dsir_select('sql_docs', 'en us', 10)" -> "must be a plain language tag",
+      "dsir_select('sql_docs', 'en', 0)" -> "budgetDiv must be >= 1")) {
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT * FROM $call"))
+      assert(e.getMessage.contains(msg), s"$call: ${e.getMessage}")
+    }
   }
 
   // ann_graph TVF (EAGER: the beam walk runs at analysis time):

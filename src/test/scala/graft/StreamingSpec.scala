@@ -450,49 +450,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
 
-  test("transformWithState funnel matches the classic funnel on real table data") {
-    import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val evs = graft.operators.Events.events(spark, sf)
-      .select($"event_id", $"ts_us", $"user_id", $"event_type", $"value")
-      .collect()
-      .map(r => Ev(r.getLong(0), new Timestamp(r.getLong(1) / 1000),
-        r.getLong(2), r.getString(3), r.getDouble(4)))
-      .sortBy(e => (e.ts.getTime, e.eventId))
-    def run(mk: () => (MemoryStream[Ev], org.apache.spark.sql.streaming.StreamingQuery),
-            table: String): Set[(Long, Long, Long)] = {
-      val (in, q) = mk()
-      try {
-        evs.grouped(math.max(evs.length / 3, 1)).foreach { chunk =>
-          in.addData(chunk.toSeq); q.processAllAvailable()
-        }
-        spark.table(table).select($"userId", $"signupUs", $"purchaseUs")
-          .as[(Long, Long, Long)].collect().toSet
-      } finally q.stop()
-    }
-    try {
-      val classic = run(() => {
-        val in = MemoryStream[Ev](spark)
-        (in, StreamingOps.funnel(in.toDS(), horizonMinutes = 1000000)
-          .writeStream.format("memory").queryName("fc").outputMode(OutputMode.Append).start())
-      }, "fc")
-      val tws = run(() => {
-        val in = MemoryStream[Ev](spark)
-        (in, StreamingOps.funnelTws(in.toDS(), horizonMinutes = 1000000)
-          .writeStream.format("memory").queryName("ft").outputMode(OutputMode.Append).start())
-      }, "ft")
-      assert(classic.nonEmpty)
-      assert(tws === classic)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("watermarked tumbling window counts match the batch shape") {
     import spark.implicits._
     val in = MemoryStream[Ev](spark)
@@ -599,37 +556,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(conv.length === 1)
       assert(conv.head.lagUs === 10L * 60000000L)
     } finally q.stop()
-  }
-
-  test("transformWithState sessionization matches the classic API semantics") {
-    import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Ev](spark)
-    val q = StreamingOps.sessionizeTws(in.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("tws").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(ev(1, 1), ev(2, 10))
-      q.processAllAvailable()
-      in.addData(ev(3, 70))
-      q.processAllAvailable()
-      in.addData(ev(9, 500, user = 99))
-      q.processAllAvailable()
-      in.addData(ev(10, 600, user = 99))
-      q.processAllAvailable()
-      val sessions = spark.table("tws").as[graft.streaming.SessionOut]
-        .collect().filter(_.userId == 1).sortBy(_.startUs)
-      assert(sessions.length === 2)
-      assert(sessions(0).nEvents === 2 && sessions(0).startUs === 60000000L)
-      assert(sessions(1).nEvents === 1 && sessions(1).startUs === 70L * 60000000L)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("streaming SCD2 closed intervals match the batch lag/lead build") {
@@ -760,25 +686,22 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("tws funnel: stale pending-purchase timer must not wipe a live signup") {
+  test("funnel: stale pending-purchase timer must not wipe a live signup") {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Ev](spark)
-    val q = StreamingOps.funnelTws(in.toDS(), horizonMinutes = 60)
+    val q = StreamingOps.funnel(in.toDS(), horizonMinutes = 60)
       .writeStream.format("memory").queryName("ftstale").outputMode(OutputMode.Append).start()
     try {
-      // pre-signup purchase anchors a 61-min timer...
+      // pre-signup purchase anchors a 61-min timeout...
       in.addData(ev(1, 1, typ = "purchase"))
       q.processAllAvailable()
       // ...then the signup lands, the unconvertible pending purchase is
       // dropped, and the anchor moves LATER (horizon now 65 min) — the
-      // 61-min timer is now stale but was never deleted
+      // 61-min expiry is stale
       in.addData(ev(2, 5, typ = "signup"))
       q.processAllAvailable()
-      // advance the watermark past 61 min (not 65): the stale timer
-      // fires while the signup state is live; old code wiped it here
+      // advance the watermark past 61 min (not 65): a stale expiry
+      // firing here would wipe the live signup state
       in.addData(ev(3, 92, user = 99, typ = "click"))
       q.processAllAvailable()
       in.addData(ev(4, 93, user = 99, typ = "click"))
@@ -791,13 +714,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(conv.length === 1)
       assert(conv.head.signupUs === 5L * 60000000L)
       assert(conv.head.purchaseUs === 64L * 60000000L)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
   test("streaming funnel emits one conversion per user, across batches") {
